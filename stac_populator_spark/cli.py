@@ -2,8 +2,13 @@
 (/root/reference/STACpopulator/cli.py:33-92):
 
     python -m stac_populator_spark run --pages <parquet> --out <dir>
-        populate: pages → STAC items (+ collection extents), resumable via
-        --checkpoint (snapshot manifest; rerun skips committed stages)
+        populate: pages → STAC items + dead letters + collection extents.
+        The pages are extracted and validated once; that frame is pinned
+        for the verb (persisted, or with --checkpoint the committed
+        snapshot a rerun resumes from) and both the errors and the items
+        are written from it. Collections are aggregated from the items
+        parquet just written. Every count in the run log is observed on
+        the write that produced it.
     python -m stac_populator_spark export --items <parquet> --out <dir>
         items table → per-collection JSON file tree, dedup-by-id first
     python -m stac_populator_spark update-collection --items <parquet>
@@ -43,8 +48,11 @@ def _footprints(spark, path: str | None):
 
 
 def cmd_run(args) -> int:
-    from .operators.spatial_join import footprint_cover_df
-    from .plans.pipeline import run_pipeline
+    from pyspark.sql import functions as F
+
+    from .operators.validate import rule_names
+    from .plans.pipeline import matched_collections, run_pipeline
+    from .runlog import RunLog, observed_counts
     from .session import get_spark
 
     if args.catalog:
@@ -58,8 +66,6 @@ def cmd_run(args) -> int:
             print(f"preflight failed: {reason}", file=sys.stderr)
             return 1
 
-    from .runlog import RunLog
-
     log = RunLog(getattr(args, "runlog", None) or f"{args.out}/_runlog.jsonl")
     log.event("run start", verb="run", pages=args.pages, out=args.out)
     spark = get_spark(app_name="stac-populator-run")
@@ -70,23 +76,37 @@ def cmd_run(args) -> int:
         _footprints(spark, args.footprints),
         checkpoint_root=args.checkpoint,
     )
-    out["items"].write.mode("overwrite").parquet(f"{args.out}/items")
-    out["collections"].write.mode("overwrite").parquet(f"{args.out}/collections")
-    out["errors"].write.mode("overwrite").parquet(f"{args.out}/errors")
-    n = spark.read.parquet(f"{args.out}/items").count()
-    n_err = spark.read.parquet(f"{args.out}/errors").count()
-    log.stage("items", n)
-    log.stage("collections", spark.read.parquet(f"{args.out}/collections").count())
-    log.failures("errors", spark.read.parquet(f"{args.out}/errors"))
+    try:
+        reason = F.col("failure_reason")
+        errors, err_obs = observed_counts(
+            out["errors"], **{r: reason == r for r in rule_names(out["validated"])}
+        )
+        errors.write.mode("overwrite").parquet(f"{args.out}/errors")
+        items, item_obs = observed_counts(
+            out["items"], rows=F.lit(True), null_geometry=F.col("geometry").isNull()
+        )
+        items.write.mode("overwrite").parquet(f"{args.out}/items")
+    finally:
+        out["validated"].unpersist()
+    # from the items just written: cells and the PIP join do not run again
+    collections, coll_obs = observed_counts(
+        matched_collections(spark.read.parquet(f"{args.out}/items")), rows=F.lit(True)
+    )
+    collections.write.mode("overwrite").parquet(f"{args.out}/collections")
+    n = item_obs.get["rows"]
+    log.stage("items", n, null_geometry=item_obs.get["null_geometry"])
+    log.stage("collections", coll_obs.get["rows"])
+    n_err = log.failures("errors", err_obs.get)["failures"]
     print(f"items written: {n} (+{n_err} dead-lettered) -> {args.out}/items")
     return 0
 
 
 def cmd_export(args) -> int:
+    from pyspark.sql import functions as F
+
+    from .runlog import RunLog, observed_counts
     from .session import get_spark
     from .sources.export import dedup_items_by_id, export_items_json
-
-    from .runlog import RunLog
 
     # sibling path: the export tree itself must not pre-exist (the
     # fresh-export mode="error" contract, reference FileExistsError
@@ -96,12 +116,14 @@ def cmd_export(args) -> int:
     spark = get_spark(app_name="stac-populator-export")
     items = spark.read.parquet(args.items)
     winners, report = dedup_items_by_id(items)
+    winners, out_obs = observed_counts(winners, rows=F.lit(True))
+    report, dup_obs = observed_counts(report, rows=F.lit(True))
     export_items_json(winners, args.out, mode="overwrite" if args.resume else "error")
     # the duplicate report is unbounded at scale — sink it, never collect it
     # (underscore prefix: Spark readers ignore it when reading the export)
     report.write.mode("overwrite").parquet(f"{args.out}/_duplicates")
-    n_dups = spark.read.parquet(f"{args.out}/_duplicates").count()
-    n_out = winners.count()
+    n_dups = dup_obs.get["rows"]
+    n_out = out_obs.get["rows"]
     log.stage("export", n_out, duplicate_ids=n_dups)
     print(f"exported {n_out} items; duplicate ids: {n_dups}"
           f" (report at {args.out}/_duplicates)")
@@ -109,15 +131,19 @@ def cmd_export(args) -> int:
 
 
 def cmd_update_collection(args) -> int:
+    from pyspark.sql import functions as F
+
     from .operators.collection_agg import update_collections
+    from .runlog import observed_counts
     from .session import get_spark
 
     spark = get_spark(app_name="stac-populator-update-collection")
     items = spark.read.parquet(args.items)
     out = update_collections(items, mode=args.mode, exclude_summaries=tuple(args.exclude or ()))
     for name, df in out.items():
+        df, obs = observed_counts(df, rows=F.lit(True))
         df.write.mode("overwrite").parquet(f"{args.out}/{name}")
-        print(f"{name}: {df.count()} rows -> {args.out}/{name}")
+        print(f"{name}: {obs.get['rows']} rows -> {args.out}/{name}")
     if not out:
         print("mode=none: nothing to do")
     return 0

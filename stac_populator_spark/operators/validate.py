@@ -62,16 +62,30 @@ def _rules(items: DataFrame, require_datetime: bool, structural: bool = False):
     return rules
 
 
+def rule_names(items: DataFrame, require_datetime: bool = False,
+               structural: bool = False) -> list[str]:
+    """Every reason ``failure_reason`` can take over ``items``, in rule order."""
+    return [name for name, _ in _rules(items, require_datetime, structural)]
+
+
+def failure_reason(items: DataFrame, require_datetime: bool = False,
+                   structural: bool = False) -> F.Column:
+    """The first failing rule's name, null when every rule passes."""
+    reason = F.lit(None).cast("string")
+    for name, rule in reversed(_rules(items, require_datetime, structural)):
+        reason = F.when(rule, F.lit(name)).otherwise(reason)
+    return reason
+
+
 def split_valid_invalid(items: DataFrame, require_datetime: bool = False,
                         structural: bool = False):
     """Returns (valid, dead_letter). dead_letter carries failure_reason —
     the first failing rule, mirroring the reference's single logged error
     per failed item. ``structural=True`` adds the STAC structural gate
     (bbox⇔geometry consistency, datetime-vs-range exclusivity)."""
-    reason = F.lit(None).cast("string")
-    for name, rule in reversed(_rules(items, require_datetime, structural)):
-        reason = F.when(rule, F.lit(name)).otherwise(reason)
-    with_reason = items.withColumn("failure_reason", reason)
+    with_reason = items.withColumn(
+        "failure_reason", failure_reason(items, require_datetime, structural)
+    )
     valid = with_reason.filter(F.col("failure_reason").isNull()).drop("failure_reason")
     dead = with_reason.filter(F.col("failure_reason").isNotNull())
     return valid, dead

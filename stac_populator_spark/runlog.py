@@ -5,8 +5,11 @@ log.py:53-94; emit sites populators.py:263-303).
 The reference logs one JSON record per item with extras (item_loc, loader,
 running counter/failure totals). At 10^12 rows a record per item IS the
 bottleneck, so the analogue is one record per STAGE, carrying the same
-information aggregated: row counts, dead-letter failure counts by reason
-(from the errors table — never a driver-side loop), and free-form extras.
+information aggregated: row counts, dead-letter failure counts by reason,
+and free-form extras. The verbs take every count from a
+``pyspark.sql.Observation`` on the write that produces the stage's output
+(``observed_counts``), so the log costs no extra Spark job and never a
+driver-side loop.
 Record shape mirrors the reference formatter: always ``message`` +
 ``timestamp`` (UTC ISO), plus every extra key at the top level.
 """
@@ -43,19 +46,12 @@ class RunLog:
     def stage(self, stage: str, rows: int, **extra) -> dict:
         return self.event(f"stage {stage}: {rows} rows", stage=stage, rows=rows, **extra)
 
-    def failures(self, stage: str, errors_df) -> dict:
-        """Aggregate the dead-letter table into failure counts by reason —
-        the run-level analogue of the reference's per-item
-        'Processed N data items. M failures' counters
-        (populators.py:268-274, 302-303)."""
-        from pyspark.sql import functions as F
-
-        counts = {
-            r["failure_reason"]: r["n"]
-            for r in errors_df.groupBy("failure_reason")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
+    def failures(self, stage: str, counts: dict) -> dict:
+        """Log failure counts by reason — the run-level analogue of the
+        reference's per-item 'Processed N data items. M failures' counters
+        (populators.py:268-274, 302-303). Reasons with no rows are left
+        out, as a group-by over the dead-letter table would."""
+        counts = {reason: n for reason, n in counts.items() if n}
         total = sum(counts.values())
         return self.event(
             f"stage {stage}: {total} failures",
@@ -63,6 +59,20 @@ class RunLog:
             failures=total,
             failure_counts=counts,
         )
+
+
+def observed_counts(df, **counts):
+    """``(df, observation)``: ``df`` with one named count per keyword,
+    each a boolean Column counting the rows where it holds, observed by
+    whatever action consumes ``df``. ``observation.get`` returns
+    {name: int} once that action has finished."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    obs = Observation()
+    aggs = [F.coalesce(F.sum(F.when(cond, 1).otherwise(0)), F.lit(0)).alias(name)
+            for name, cond in counts.items()]
+    return df.observe(obs, *aggs), obs
 
 
 def read_runlog(path: str) -> list[dict]:

@@ -29,6 +29,9 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from ..runlog import observed_counts
 
 
 class StageManifest:
@@ -106,28 +109,28 @@ class CheckpointedPipeline:
         done = self.manifest.load()["stages"].get(stage)
         if done and self.spark.catalog.tableExists(table):
             return self.spark.table(table)
-        df: DataFrame = build()
+        df, obs = observed_counts(build(), rows=F.lit(True))
         t0 = time.time()
         df.writeTo(table).createOrReplace()
         wall_ms = int((time.time() - t0) * 1000)
-        out = self.spark.table(table)
         self.manifest.commit_stage(
             stage,
             {
                 "snapshot_id": snapshot_ids(self.spark, table)[-1],
                 "path": table,
-                "rows": out.count(),
+                "rows": obs.get["rows"],
                 "bytes": None,
                 "wall_ms": wall_ms,
                 "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
             },
         )
-        return out
+        return self.spark.table(table)
 
     def run_stage(self, stage: str, build, partition_by: tuple = ()) -> DataFrame:
         """Return the stage's output DataFrame, computing + committing it
         only if no committed snapshot exists. ``build()`` is called lazily —
-        a resumed run never re-executes upstream work."""
+        a resumed run never re-executes upstream work. ``rows`` in the
+        manifest is observed on the write itself, not re-counted."""
         if self.catalog is not None:
             return self._run_stage_iceberg(stage, build)
         done = self.manifest.completed(stage)
@@ -135,7 +138,7 @@ class CheckpointedPipeline:
         if done:
             return self.spark.read.parquet(path)
 
-        df: DataFrame = build()
+        df, obs = observed_counts(build(), rows=F.lit(True))
         t0 = time.time()
         tmp = path + f"._tmp.{uuid.uuid4().hex}"
         writer = df.write.mode("overwrite")
@@ -147,8 +150,6 @@ class CheckpointedPipeline:
         os.replace(tmp, path)
         wall_ms = int((time.time() - t0) * 1000)
 
-        out = self.spark.read.parquet(path)
-        rows = out.count()
         size = sum(
             os.path.getsize(os.path.join(dp, fn))
             for dp, _, fns in os.walk(path)
@@ -159,13 +160,13 @@ class CheckpointedPipeline:
             {
                 "snapshot_id": uuid.uuid4().hex,
                 "path": path,
-                "rows": rows,
+                "rows": obs.get["rows"],
                 "bytes": size,
                 "wall_ms": wall_ms,
                 "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
             },
         )
-        return out
+        return self.spark.read.parquet(path)
 
     def stage_metrics(self) -> dict:
         return self.manifest.load()["stages"]

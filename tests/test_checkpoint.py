@@ -35,24 +35,13 @@ def test_kill_between_stages_then_resume(spark, tmp_path):
     pages = pages_df(spark, 400, partitions=2)
     fps = footprints_pdf()[:100]
 
-    # "killed" run: only stage 1 commits (simulate by running stage 1 alone,
-    # exactly as run_pipeline builds it)
-    from pyspark.sql import functions as F
-
-    from stac_populator_spark.operators.spatial_join import footprint_cover_df
-    from stac_populator_spark.operators.validate import split_valid_invalid
-    from stac_populator_spark.plans.pipeline import build_items
+    # "killed" run: the validated extract commits, then the run dies
+    # before any output is written (stage built with run_pipeline's helper)
+    from stac_populator_spark.plans.pipeline import VALIDATED_STAGE, validated_extract
 
     cp = CheckpointedPipeline(spark, root)
-    cover = footprint_cover_df(spark, fps)
-
-    def build_tagged():
-        valid, dead = split_valid_invalid(build_items(pages, cover))
-        return valid.withColumn("failure_reason", F.lit(None).cast("string")).unionByName(dead)
-
-    cp.run_stage("extracted", build_tagged)
-    assert StageManifest(root).completed("extracted") is not None
-    assert StageManifest(root).completed("collections") is None
+    cp.run_stage(VALIDATED_STAGE, lambda: validated_extract(pages))
+    assert StageManifest(root).completed("validated") is not None
 
     # resumed full run
     out = run_pipeline(spark, pages, fps, checkpoint_root=root)
@@ -67,12 +56,11 @@ def test_kill_between_stages_then_resume(spark, tmp_path):
                                   ref_items[key_cols].sort_values(key_cols).reset_index(drop=True))
     # no duplicates introduced by the resume
     assert not resumed_items.duplicated(subset=["id", "collection_id"]).any()
-    # all stages now committed, with lineage metrics; dead letters are a
-    # filter of the committed stage (no recompute), empty on clean data
+    # the stage is committed once, with lineage metrics; dead letters are
+    # a filter of the committed stage (no recompute), empty on clean data
     metrics = out["metrics"]
-    assert set(metrics) == {"extracted", "collections"}
-    for m in metrics.values():
-        assert m["rows"] > 0 and m["bytes"] > 0
+    assert set(metrics) == {"validated"}
+    assert metrics["validated"]["rows"] == 400 and metrics["validated"]["bytes"] > 0
     assert out["errors"].count() == 0
 
 
