@@ -222,7 +222,7 @@ def _customers_no_orders(spark, sf_dir):
 
 
 def _doc_points_tiles(spark, sf_dir):
-    from stac_populator_spark.operators.cells import grid_cell_udf
+    from stac_populator_spark.operators.cells import grid_cell_col
     from stac_populator_spark.operators.tiles import tile_xy_cols
 
     pts = _doc_points(_t(spark, sf_dir, "documents"))
@@ -233,16 +233,16 @@ def _doc_points_tiles(spark, sf_dir):
         F.round("lat", 6).alias("lat"),
         x.alias("tile_x"),
         y.alias("tile_y"),
-        grid_cell_udf(F.col("lon"), F.col("lat")).alias("cell_grid"),
+        grid_cell_col("lon", "lat").alias("cell_grid"),
     )
 
 
 def _pip_points(spark, sf_dir):
-    from stac_populator_spark.operators.cells import grid_cell_udf
+    from stac_populator_spark.operators.cells import grid_cell_col
     from stac_populator_spark.operators.spatial_join import footprint_cover_df, pip_join
 
     pts = _doc_points(_t(spark, sf_dir, "documents")).withColumn(
-        "cell_grid", grid_cell_udf(F.col("lon"), F.col("lat"))
+        "cell_grid", grid_cell_col("lon", "lat")
     )
     fps = _nation_footprints(spark, sf_dir).toPandas()
     fps = fps.rename(columns={c: c[2:] for c in ("f_lon_min", "f_lat_min", "f_lon_max", "f_lat_max")})
@@ -872,7 +872,7 @@ def _stac_collections_items(spark, sf_dir):
     lon/lat (derived) + lang/source straight through the broadcast PIP
     join — zero joins, zero exchanges before the final aggregation
     (pinned in tests/test_plans.py)."""
-    from stac_populator_spark.operators.cells import grid_cell_udf
+    from stac_populator_spark.operators.cells import grid_cell_col
     from stac_populator_spark.operators.spatial_join import footprint_cover_df, pip_join
 
     docs = _t(spark, sf_dir, "documents")
@@ -882,7 +882,7 @@ def _stac_collections_items(spark, sf_dir):
         "source",
         (((F.col("doc_id") * 37) % 3600) / 10.0 - 179.95).alias("lon"),
         (((F.col("doc_id") * 53) % 1700) / 10.0 - 84.95).alias("lat"),
-    ).withColumn("cell_grid", grid_cell_udf(F.col("lon"), F.col("lat")))
+    ).withColumn("cell_grid", grid_cell_col("lon", "lat"))
     fps = _nation_footprints(spark, sf_dir).toPandas()
     fps = fps.rename(columns={c: c[2:] for c in ("f_lon_min", "f_lat_min", "f_lon_max", "f_lat_max")})
     fps["bbox"] = fps[["lon_min", "lat_min", "lon_max", "lat_max"]].values.tolist()
@@ -2146,8 +2146,8 @@ def oracle_sql() -> dict[str, str]:
             SELECT doc_id, ROUND(lon, 6) AS lon, ROUND(lat, 6) AS lat,
                    GREATEST(0, LEAST(127, CAST(FLOOR((lon + 180.0) / (360.0/128)) AS INT))) AS tile_x,
                    GREATEST(0, LEAST(127, CAST(FLOOR((85.0 - lat) / (170.0/128)) AS INT))) AS tile_y,
-                   LEAST(89, CAST(FLOOR((lon + 180.0) / 4.0) AS BIGINT)) * 1000
-                     + LEAST(44, CAST(FLOOR((lat + 90.0) / 4.0) AS BIGINT)) AS cell_grid
+                   GREATEST(0, LEAST(89, CAST(FLOOR((lon + 180.0) / 4.0) AS BIGINT))) * 1000
+                     + GREATEST(0, LEAST(44, CAST(FLOOR((lat + 90.0) / 4.0) AS BIGINT))) AS cell_grid
             FROM ({_DOC_POINTS_SQL}) pts
         """,
         "pip_points": f"""

@@ -274,10 +274,3 @@ def pages_from_documents(documents):
         F.col("lang"),
     )
 
-
-def footprints_df(spark):
-    return spark.createDataFrame(footprints_pdf())
-
-
-def tiles_df(spark, z: int = TILE_Z):
-    return spark.createDataFrame(tiles_pdf(z))

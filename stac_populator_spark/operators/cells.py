@@ -1,5 +1,5 @@
 """Spatial cell-encoding stage: S2 level-12 + icosahedral hex res-7 +
-coarse join grid, in one Arrow pass (north_rule indexing requirement).
+coarse join grid (north_rule indexing requirement).
 
 Three index columns per item:
 - ``cell_s2``   — S2 level-12 id (functions.s2), the canonical spatial key
@@ -12,14 +12,17 @@ Three index columns per item:
   broadcast PIP join (footprint covers are tiny at this granularity)
 
 All three are pure functions of (lon, lat); the stage is narrow (no
-shuffle) and JVM→Arrow batched.
+shuffle). S2 and hex share one Arrow pass through a pandas UDF; the grid
+id is plain arithmetic the DuckDB oracle states in SQL, so it is a JVM
+column expression (:func:`grid_cell_col`) that never crosses into Python.
 """
 
 from __future__ import annotations
 
-import numpy as np
+import math
+
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
@@ -32,58 +35,50 @@ S2_LEVEL = 12
 HEX_RES = 7
 
 
-def grid_cell_np(lon, lat, grid_deg: float = GRID_DEG) -> np.ndarray:
-    """Coarse grid id: gx * 1000 + gy; -1 for null geometry. Matches the
-    SQL-expressible formula used by the DuckDB oracle
-    (floor((lon+180)/g)*1000 + floor((lat+90)/g))."""
-    lon = np.asarray(lon, dtype=np.float64)
-    lat = np.asarray(lat, dtype=np.float64)
-    nan = ~np.isfinite(lon) | ~np.isfinite(lat)
-    gx = np.floor((np.where(nan, 0.0, lon) + 180.0) / grid_deg).astype(np.int64)
-    gy = np.floor((np.where(nan, 0.0, lat) + 90.0) / grid_deg).astype(np.int64)
-    nx = int(np.ceil(360.0 / grid_deg))
-    ny = int(np.ceil(180.0 / grid_deg))
-    gx = np.clip(gx, 0, nx - 1)  # lon=180 folds into the last column
-    gy = np.clip(gy, 0, ny - 1)  # lat=90 folds into the last row (matches _cover_box clamp)
-    return np.where(nan, np.int64(-1), gx * 1000 + gy)
+def grid_cell_col(lon: Column | str, lat: Column | str, deg: float = GRID_DEG) -> Column:
+    """Coarse grid id ``gx * 1000 + gy``; -1 when lon or lat is null, NaN
+    or ±inf. The single point→grid formula of the engine (the footprint
+    side, ``spatial_join._cover_box``, covers boxes, not points).
 
+    gx = floor((lon + 180) / deg) clamped to [0, ceil(360/deg) - 1], gy =
+    floor((lat + 90) / deg) clamped to [0, ceil(180/deg) - 1]: lon=180 folds
+    into the last column and lat=90 into the last row, matching
+    ``_cover_box``'s clamp. The quotient is clamped before the floor (equal
+    for integral bounds), so no input can overflow the long cast."""
+    lon = F.col(lon) if isinstance(lon, str) else lon
+    lat = F.col(lat) if isinstance(lat, str) else lat
 
-@pandas_udf(T.LongType())
-def s2_cell_udf(lon: pd.Series, lat: pd.Series) -> pd.Series:
-    return pd.Series(s2_cell_id(lon.to_numpy(), lat.to_numpy(), S2_LEVEL))
+    def finite(v: Column) -> Column:
+        return v.isNotNull() & ~F.isnan(v) & (F.abs(v) != F.lit(math.inf))
 
+    def axis(v: Column, offset: float, span: float) -> Column:
+        top = float(math.ceil(span / deg) - 1)
+        return F.floor(F.least(F.greatest((v + offset) / deg, F.lit(0.0)), F.lit(top)))
 
-@pandas_udf(T.LongType())
-def hex_cell_udf(lon: pd.Series, lat: pd.Series) -> pd.Series:
-    # cell_hex dispatches icosa (default) vs real Uber-H3 ids when the
-    # environment opted in (SPARK_GRAFT_HEX_BACKEND) and the wheel exists
-    return pd.Series(cell_hex(lon.to_numpy(), lat.to_numpy(), HEX_RES))
-
-
-@pandas_udf(T.LongType())
-def grid_cell_udf(lon: pd.Series, lat: pd.Series) -> pd.Series:
-    return pd.Series(grid_cell_np(lon.to_numpy(), lat.to_numpy()))
+    cell = axis(lon, 180.0, 360.0) * 1000 + axis(lat, 90.0, 180.0)
+    return F.when(finite(lon) & finite(lat), cell).otherwise(F.lit(-1))
 
 
 _CELLS_STRUCT = T.StructType(
     [
         T.StructField("s2", T.LongType()),
         T.StructField("hex", T.LongType()),
-        T.StructField("grid", T.LongType()),
     ]
 )
 
 
 @pandas_udf(_CELLS_STRUCT)
 def all_cells_udf(lon: pd.Series, lat: pd.Series) -> pd.DataFrame:
-    """All three indexes in ONE Arrow round-trip — (lon, lat) cross the
-    JVM↔Python bridge once instead of three times."""
+    """S2 and hex in ONE Arrow round-trip — (lon, lat) cross the
+    JVM↔Python bridge once instead of twice."""
     lo, la = lon.to_numpy(), lat.to_numpy()
     return pd.DataFrame(
         {
             "s2": s2_cell_id(lo, la, S2_LEVEL),
+            # cell_hex dispatches icosa (default) vs real Uber-H3 ids when
+            # the environment opted in (SPARK_GRAFT_HEX_BACKEND) and the
+            # wheel exists
             "hex": cell_hex(lo, la, HEX_RES),
-            "grid": grid_cell_np(lo, la),
         }
     )
 
@@ -96,6 +91,6 @@ def encode_cells(items: DataFrame, lon_col: str = "lon", lat_col: str = "lat") -
         items.withColumn("_cells", all_cells_udf(lon, lat))
         .withColumn("cell_s2", F.when(has, F.col("_cells.s2")))
         .withColumn("cell_hex", F.when(has, F.col("_cells.hex")))
-        .withColumn("cell_grid", F.when(has, F.col("_cells.grid")))
+        .withColumn("cell_grid", F.when(has, grid_cell_col(lon, lat)))
         .drop("_cells")
     )

@@ -31,6 +31,13 @@ from pyspark.sql import functions as F
 EXCLUDE_ALWAYS = ("datetime", "start_datetime", "end_datetime")
 
 
+def collected_items(items: DataFrame, collection_col: str = "collection_id") -> DataFrame:
+    """The items that belong to a collection. Geometry-less and
+    footprint-unmatched items pass through ``run`` with a null collection
+    id; they stay out of every collection aggregate."""
+    return items.filter(F.col(collection_col).isNotNull())
+
+
 def collection_extent(items: DataFrame, collection_col: str = "collection_id") -> DataFrame:
     """groupBy collection → spatial bbox union + sticky-open temporal
     interval. Input columns: lon_min/lat_min/lon_max/lat_max (nullable),
@@ -278,9 +285,11 @@ def update_collections(
     exclude_summaries: tuple = (),
 ) -> dict:
     """A4 dispatcher (collection_update.py:142-167): mode ∈ {extents,
-    summaries, all, none} → dict of the requested aggregate DataFrames."""
+    summaries, all, none} → dict of the requested aggregate DataFrames,
+    over the :func:`collected_items` only."""
     if mode not in ("extents", "summaries", "all", "none"):
         raise ValueError(f"invalid mode {mode!r}")
+    items = collected_items(items, collection_col)
     out: dict = {}
     if mode in ("extents", "all"):
         out["extents"] = collection_extent(items, collection_col)

@@ -240,7 +240,10 @@ def minhash_near_duplicates(df: DataFrame, text_col: str = "text",
     # canonicalized exchanges differ and the full text scan + md5 collapse
     # re-executed per consumer (guide §2.4: remove repeated passes). The r5
     # note claiming the pin was slower measured an EAGER variant confounded
-    # by plan-build cost; the lazy pin is 6.9 s → 2.0 s at sf1 by itself.
+    # by plan-build cost; the eager=False pin is 6.9 s → 2.0 s at sf1 by
+    # itself. It is not lazy under AQE: the call itself runs the upstream
+    # shuffle stages (the md5 collapse) to plan the pinned aggregate, so
+    # that work lands inside this function, before any action.
     # Scale: the checkpoint materializes one row per distinct text — the
     # same bytes the collapse exchange already wrote, spilled to local disk
     # by storage level, vs 3-4 extra full-corpus scans without it.
@@ -562,6 +565,8 @@ def simhash_candidates(sigs: DataFrame, id_col: str = "doc_id",
     # signature scan re-executed per consumer (measured 5.5 s → 1.6 s at
     # sf1, 3.2 s → 0.4 s at sf0.1 from the pin alone; see
     # :func:`minhash_near_duplicates` for the same finding + scale note).
+    # Under AQE the call runs the signature scan's shuffle stage at once:
+    # eager=False defers only the final stage, not the upstream exchange.
     grp = sigs.groupBy("simhash").agg(
         F.min(id_col).alias("_rep"),
         F.sort_array(F.collect_list(id_col)).alias("_ids"),

@@ -9,8 +9,8 @@ self-join each item against items in its cell's k-ring neighborhood:
     join on cell  →  candidate pairs  →  haversine distance
     →  Window.partitionBy(left_id).orderBy(dist, right_id) rank ≤ k
 
-The join key (hex cell) is data-skewed (cities vs oceans) — `salt_keys`
-(operators.skew) + AQE skew-join handle the hot cells. The k-ring radius
+The join key (hex cell) is data-skewed (cities vs oceans) —
+`knn_join_salted` salts the hot cells and AQE skew-join handles the rest. The k-ring radius
 bounds the search; items whose true k-th neighbor lies beyond the ring get
 their ring-local top-k (documented approximation; `knn_bruteforce` is the
 exact oracle used by tests and small data).
@@ -407,12 +407,14 @@ def knn_join_exact(
     rem_caps = None  # polar-cap populations of `remaining`, kept in sync
     # by the escalation loop's materialization aggregate
     for _ in range(0 if n_total * n_total <= brute_budget else max_escalations):
-        # lazy checkpoint: the ring pass (join + haversine + window — the
-        # expensive subtree) is materialized ONCE by the eager `unsat`
-        # checkpoint below and its RDD is then REUSED by this escalation's
-        # done_parts branch in the final job — without it the full ring
-        # join re-executed per escalation inside the final union (r6:
-        # measured 2× the ring cost per escalation at sf1)
+        # checkpoint (eager=False): the ring pass (join + haversine +
+        # window — the expensive subtree) is materialized ONCE and its RDD
+        # is then REUSED by this escalation's done_parts branch in the
+        # final job — without it the full ring join re-executed per
+        # escalation inside the final union (r6: measured 2× the ring cost
+        # per escalation at sf1). Under AQE this call already runs the ring
+        # join's upstream shuffle stages; the rest waits for the `unsat`
+        # aggregate below.
         ring = _ring_topk(remaining, pts, k=k, res=res, radius=radius_i).localCheckpoint(
             eager=False
         )
@@ -428,13 +430,14 @@ def knn_join_exact(
         required_deg = F.col("kth_km") / (F.lit(111.0) * F.cos(F.radians(lat_margin)))
         near_pole = F.abs(F.col("lat")) >= F.lit(90.0 - 2.0 * e * (radius_i + 1))
         satisfied = (F.col("n_found") >= k) & (required_deg <= F.lit(d_deg_safe)) & ~near_pole
-        # lazy checkpoint + one aggregate job (r6): the former EAGER
-        # checkpoint ran one job to materialize and a second to count; the
-        # aggregate below materializes the checkpoint AND returns the
-        # count plus the polar-cap populations the polar round needs — one
-        # driver job per escalation instead of three (job overhead is the
-        # whole cost at small scale: the ring volume at sf1 is ~16
-        # candidates/point). Lineage is still cut: the checkpointed RDD is
+        # eager=False checkpoint + one aggregate job (r6; under AQE the
+        # call itself already runs the per_point/stats shuffle stages): the
+        # former EAGER checkpoint ran one job to materialize and a second
+        # to count; the aggregate below materializes the checkpoint AND
+        # returns the count plus the polar-cap populations the polar round
+        # needs — one driver job per escalation instead of three (job
+        # overhead is the whole cost at small scale: the ring volume at sf1
+        # is ~16 candidates/point). Lineage is still cut: the checkpointed RDD is
         # pinned at first materialization.
         unsat = stats.filter(~F.coalesce(satisfied, F.lit(False))).select(
             "id", "lon", "lat"
@@ -537,9 +540,10 @@ def knn_join_exact(
                 F.radians(rlat_margin)
             )
             edge_ok = F.col("kth_km") <= (F.abs(F.col("lat")) - F.lit(bf_i)) * F.lit(111.0)
-            # lazy checkpoint: materialized once inside the final job,
-            # reused by both the semi (done) and anti (remnant) branches —
-            # no extra driver round-trip unless the caller asked for stats
+            # eager=False checkpoint: reused by both the semi (done) and
+            # anti (remnant) branches. Under AQE the call runs per_point's
+            # shuffle stages at once; the rest materializes inside the
+            # final job (or the stats count below).
             proven = per_point.filter(
                 (F.col("n_found") >= k) & ring_ok & edge_ok
             ).select("id").localCheckpoint(eager=False)

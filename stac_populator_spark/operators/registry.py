@@ -29,10 +29,6 @@ def register_parser(name: str, fn: Callable) -> None:
     _REGISTRY[name] = fn
 
 
-def get_parser(name: str) -> Callable:
-    return _REGISTRY[name]
-
-
 def load_parser(spec: str) -> Callable:
     """'package.module:function' → callable (reference utils.py:9-33 —
     the file-path variant is out of scope here; module specs only)."""

@@ -5,14 +5,15 @@ Both are standard stages of public web-text pipelines (the GPT-3 paper's
 13-gram eval-overlap filter, Appendix A; C4's regex scrubbing) re-expressed
 Spark-first:
 
-- **PII redaction** is a pure column-expression regexp_replace chain —
-  whole-stage codegen, zero Python, linear scan. Patterns are
-  deliberately RE2-compatible so the DuckDB oracle mirrors them verbatim.
-- **Decontamination** is an n-gram-hash semi-join: the eval/benchmark side
-  (small by construction) is exploded to distinct shingle hashes and
-  broadcast; the training corpus explodes its shingles once and
-  left-semi-joins — contaminated doc ids come back without shuffling the
-  corpus (broadcast hash join), the aggregation is the only exchange.
+- **PII redaction** runs the patterns as pyarrow RE2 kernels in one
+  ``mapInArrow`` pass over whole Arrow batches — a narrow linear scan, no
+  shuffle. Patterns are deliberately RE2-compatible so the DuckDB oracle
+  mirrors them verbatim.
+- **Decontamination** is a numpy fingerprint kernel: token hashes are
+  computed in the JVM, then one ``mapInArrow`` folds them into n-gram
+  fingerprints and probes the eval side's sorted fingerprint array
+  (collected once, broadcast) — contaminated doc ids come back from a
+  narrow map, without exploding or shuffling the corpus.
 
 Reference tie-in: the dead-letter/validity framing follows the same
 route-don't-drop contract as operators/validate.py (reference
@@ -33,6 +34,11 @@ PII_PATTERNS = {
     # \b-first silently drops the leading '+' from the match
     "phone": r"\+?\b\d{3}[-.]\d{3,4}[-.]\d{4}\b",
 }
+
+
+# eval documents decontaminate collects to the driver; benchmarks are
+# thousands of documents, so a larger eval set is a caller error
+MAX_EVAL_DOCS = 100_000
 
 
 def redact_pii(df: DataFrame, text_col: str = "text",
@@ -116,42 +122,11 @@ def ngram_hashes_from_words(words: F.Column, n: int = 5) -> F.Column:
     )
 
 
-def ngram_hashes(text_col, n: int = 5) -> F.Column:
-    """Single-expression spelling of :func:`ngram_hashes_from_words` —
-    back-compat only. The inline ``split`` re-evaluates per element inside
-    the transform lambda; hot paths must use the two-stage form."""
-    return ngram_hashes_from_words(words_col(text_col), n)
-
-
 def token_hashes_col(words: F.Column) -> F.Column:
     """Per-token xxhash64 array — materialize in its OWN projection before
-    :func:`ngram_hashes_from_token_hashes` (same per-element re-evaluation
-    rule as :func:`words_col`)."""
+    :func:`decontaminate`'s gram kernel reads it (same per-element
+    re-evaluation rule as :func:`words_col`)."""
     return F.transform(words, lambda t: F.xxhash64(t))
-
-
-def ngram_hashes_from_token_hashes(hashes: F.Column, n: int = 5) -> F.Column:
-    """Distinct n-gram fingerprints over an already-computed per-token
-    xxhash64 array: gram hash = xxhash64 over the n token hashes.
-
-    r6 (guide §4.1): the string formulation
-    (``xxhash64(concat_ws(' ', slice(words, i+1, n)))``) allocated a slice
-    array + a joined string per gram inside the interpreted lambda; hashing
-    the n token LONGS instead (each token's string is hashed ONCE up front)
-    cuts the gram stage 3.6 s → 2.2 s at sf1. Matching semantics are
-    unchanged: both sides of a decontamination join use the same
-    fingerprint, two grams collide across formulations only at the 2^-64
-    hash-collision level (same exactness class as the old spelling, whose
-    distinct-gram counts were also hash-based), and the short-document
-    branch hashes the whole token-hash array so sub-n docs still only match
-    equal token sequences."""
-    grams = F.transform(
-        F.sequence(F.lit(0), F.greatest(F.size(hashes) - n, F.lit(0))),
-        lambda i: F.xxhash64(*[F.element_at(hashes, i + j + 1) for j in range(n)]),
-    )
-    return F.array_distinct(
-        F.when(F.size(hashes) >= n, grams).otherwise(F.array(F.xxhash64(hashes)))
-    )
 
 
 def decontaminate(
@@ -166,26 +141,23 @@ def decontaminate(
     contaminated carries ``n_hits``).
 
     Scale shape: the eval side is small by construction (benchmarks are
-    thousands of documents, the corpus is 10^12) → its distinct shingle
-    hashes broadcast; the corpus side explodes shingles ONCE, inner-joins
-    the broadcast table, and aggregates hit counts per doc — the only
-    exchange is the per-doc hit aggregation, and it carries only
-    (id, hash) pairs that actually matched.
+    thousands of documents, the corpus 10^12). Its token-hash arrays come
+    to the driver — at most ``MAX_EVAL_DOCS`` rows, a larger eval set
+    raises ``ValueError`` — and the same numpy code that scans the corpus
+    fingerprints them into one sorted array, broadcast to the executors.
+    The corpus side is one narrow ``mapInArrow``: it computes each
+    document's n-gram fingerprints (``xxh64_chain`` is a bit-exact replica
+    of Spark's ``xxhash64(h_i, .., h_{i+n-1})`` fold, parity test-pinned),
+    tests them against the broadcast array with ``searchsorted``, and
+    emits (id, n_hits) for matched documents only. No gram explode, no
+    join and no aggregation exchange produce the hits; the two outputs
+    join the corpus to that small id set.
+
+    The broadcast is not unpersisted here: both returned frames run the
+    kernel lazily, after this call returns, and ``Broadcast.unpersist``
+    only drops executor copies (they are re-sent on the next use), so no
+    point inside this function releases anything.
     """
-    # r6 (guide §4.2/§8): the gram stage runs as a numpy kernel instead of
-    # an interpreted-lambda transform + explode + broadcast join + groupBy.
-    # Token hashing stays JVM-side (codegen xxhash64 per token, two-stage
-    # projection per finding 1); the kernel then computes the n-gram
-    # fingerprints — xxh64_chain is a BIT-EXACT replica of Spark's
-    # xxhash64(h_i, .., h_{i+n-1}) fold (parity test-pinned) — probes the
-    # broadcast eval fingerprint set with a searchsorted membership test,
-    # and emits (id, n_hits) for matched docs only. This removes the
-    # 2.5M-row gram explode, the join, AND the per-doc hit aggregation
-    # exchange: hits is produced by a narrow map over (id, hash-array)
-    # rows. The eval side is small by construction (benchmarks are
-    # thousands of docs, the corpus 10^12) — exactly the assumption the
-    # former F.broadcast(eval_hashes) already made — so its token-hash
-    # arrays come to the driver and the SAME numpy code fingerprints them.
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -199,7 +171,12 @@ def decontaminate(
             *keep, token_hashes_col(F.col("_w")).alias("_h")
         )
 
-    ev = _token_hash_frame(eval_set).toPandas()["_h"]
+    ev = _token_hash_frame(eval_set).limit(MAX_EVAL_DOCS + 1).toPandas()["_h"]
+    if len(ev) > MAX_EVAL_DOCS:
+        raise ValueError(
+            f"decontaminate collects the eval set to the driver; it has more than "
+            f"{MAX_EVAL_DOCS} rows"
+        )
     lists = [np.asarray(a, dtype=np.int64) if a is not None else np.empty(0, np.int64)
              for a in ev]
     offsets = np.zeros(len(lists) + 1, dtype=np.int64)

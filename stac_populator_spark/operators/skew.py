@@ -1,11 +1,10 @@
-"""Salted-key skew handling for large-large joins/aggregations (J8).
+"""Skew and parallelism guards for the map-side and aggregation stages (J8).
 
 Spatial keys are Zipf-skewed (megacity hex cells, `lang='en'` ≈ 45% of
 pages — FIXTURES.md §1). AQE's skew-join splitting covers sort-merge joins;
-for aggregations and cell self-joins we salt explicitly:
-
-- fact side: ``salted = concat(key, '#', pmod(hash(row-unique), S))``
-- dim side:  exploded S ways so every salted key still matches
+for aggregations we salt explicitly (:func:`two_phase_count`: partial
+aggregate per (key, pmod(hash(row-unique), S)), then per key). The kNN
+cell self-join salts its hot cells itself (``knn.knn_join_salted``).
 
 Salts derive from deterministic column hashes — never ``rand()`` — so runs
 are reproducible and retried tasks produce identical output (a correctness
@@ -16,30 +15,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def salt_column(key_col: str, unique_col: str, n_salts: int) -> F.Column:
-    """Deterministic salted join/group key."""
-    return F.concat(
-        F.col(key_col).cast("string"),
-        F.lit("#"),
-        F.pmod(F.xxhash64(F.col(unique_col)), F.lit(n_salts)).cast("string"),
-    )
-
-
-def salt_fact(df: DataFrame, key_col: str, unique_col: str, n_salts: int,
-              out_col: str = "salted_key") -> DataFrame:
-    return df.withColumn(out_col, salt_column(key_col, unique_col, n_salts))
-
-
-def explode_dim(df: DataFrame, key_col: str, n_salts: int,
-                out_col: str = "salted_key") -> DataFrame:
-    """Replicate the dim side n_salts ways so each salted fact key matches."""
-    salts = F.sequence(F.lit(0), F.lit(n_salts - 1))
-    return df.withColumn("_salt", F.explode(salts)).withColumn(
-        out_col,
-        F.concat(F.col(key_col).cast("string"), F.lit("#"), F.col("_salt").cast("string")),
-    ).drop("_salt")
 
 
 def ensure_parallelism(df: DataFrame, factor: int = 2) -> DataFrame:

@@ -33,7 +33,7 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from ..functions.pip import points_in_ring
-from .cells import GRID_DEG, grid_cell_np
+from .cells import GRID_DEG, grid_cell_col
 
 
 def _cover_box(lon_min: float, lat_min: float, lon_max: float, lat_max: float,
@@ -184,24 +184,14 @@ def pip_join_multires(
     exact: str = "rect",
 ) -> DataFrame:
     """Broadcast PIP join against a multi-resolution cover: the fact side
-    computes one grid cell per level (pure arithmetic via the shared
-    formula) and unions the per-level broadcast joins — still zero
-    fact-side shuffle; candidate volume stays bounded for footprints of
-    any size."""
-    from pyspark.sql import functions as F2
-
+    computes one grid cell per level (``grid_cell_col`` at that level's
+    resolution, a JVM expression) and unions the per-level broadcast
+    joins — still zero fact-side shuffle; candidate volume stays bounded
+    for footprints of any size."""
     out = None
     for ri, deg in enumerate(levels):
         lvl_cover = cover.filter(F.col("res") == ri).drop("res")
-        import math
-
-        nx = 1000  # same gx*1000+gy packing as grid_cell_np
-        gx = F2.floor((F2.col("lon") + 180.0) / deg).cast("long")
-        gx = F2.least(gx, F2.lit(int(math.ceil(360.0 / deg)) - 1))
-        gy = F2.floor((F2.col("lat") + 90.0) / deg).cast("long")
-        # lat=90 folds into the last row, matching _cover_box's lat_max clamp
-        gy = F2.least(gy, F2.lit(int(math.ceil(180.0 / deg)) - 1))
-        lvl_items = items.withColumn("cell_grid", gx * nx + gy)
+        lvl_items = items.withColumn("cell_grid", grid_cell_col("lon", "lat", deg))
         j = pip_join(lvl_items, lvl_cover, exact=exact)
         out = j if out is None else out.unionByName(j)
     return out

@@ -187,15 +187,6 @@ def cv_check(col: str, vocabulary: tuple | list) -> F.Column:
     return F.col(col).isNotNull() & ~F.col(col).isin(list(vocabulary))
 
 
-def split_by_cv(items: DataFrame, col: str, vocabulary: tuple | list):
-    """(valid, dead_letter) on a controlled-vocabulary column; dead rows
-    carry failure_reason 'cv_<col>'."""
-    bad = cv_check(col, vocabulary)
-    valid = items.filter(~bad)
-    dead = items.filter(bad).withColumn("failure_reason", F.lit(f"cv_{col}"))
-    return valid, dead
-
-
 def unknown_collection_dead_letter(items: DataFrame, collections: DataFrame,
                                    collection_col: str = "collection_id"):
     """Items referencing a collection id that does not exist → dead letter

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.cells import encode_cells
-from ..operators.collection_agg import collection_extent
+from ..operators.collection_agg import collected_items, collection_extent
 from ..operators.extract import extract_items
 from ..operators.spatial_join import footprint_cover_df, pip_join
 from ..operators.stac_json import stac_item_json
@@ -102,9 +102,8 @@ def split_validated(validated: DataFrame, cover: DataFrame,
 
 
 def matched_collections(items: DataFrame) -> DataFrame:
-    """Collection extents over the footprint-matched items; the
-    null-collection (geometry-less / unmatched) items stay out."""
-    return collection_extent(items.filter(F.col("collection_id").isNotNull()))
+    """Collection extents over the footprint-matched items."""
+    return collection_extent(collected_items(items))
 
 
 def run_pipeline(

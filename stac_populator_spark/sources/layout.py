@@ -17,31 +17,25 @@ small-files problem at 10^12 rows.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
-
-from ..functions.s2 import s2_parent
 
 COARSE_LEVEL = 4
 
 
-@pandas_udf(T.LongType())
-def s2_coarse_udf(cell: pd.Series) -> pd.Series:
-    vals = cell.to_numpy(dtype=np.int64)
-    out = s2_parent(vals, COARSE_LEVEL)
-    return pd.Series(np.where(vals == 0, 0, out))
+def s2_coarse_col(cell: F.Column) -> F.Column:
+    """S2 parent at ``COARSE_LEVEL`` as a JVM expression: ``(cell &
+    ~(lsb-1)) | lsb`` with lsb = 1 << 2(30-level) — the integer bit
+    arithmetic of ``functions.s2.s2_parent``, on the id's two's-complement
+    bits. Null and 0 (no cell) map to 0."""
+    lsb = 1 << (2 * (30 - COARSE_LEVEL))
+    parent = cell.bitwiseAND(F.lit(~(lsb - 1))).bitwiseOR(F.lit(lsb))
+    return F.when(cell.isNotNull() & (cell != 0), parent).otherwise(F.lit(0))
 
 
 def write_items_partitioned(items: DataFrame, path: str, mode: str = "overwrite") -> None:
     (
-        items.withColumn(
-            "cell_coarse",
-            F.when(F.col("cell_s2").isNotNull(), s2_coarse_udf(F.col("cell_s2"))).otherwise(F.lit(0)),
-        )
+        items.withColumn("cell_coarse", s2_coarse_col(F.col("cell_s2")))
         .write.mode(mode)
         .partitionBy("lang", "cell_coarse")
         .parquet(path)

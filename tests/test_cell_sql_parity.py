@@ -5,7 +5,9 @@ cases — so a refactor of functions/s2.py or functions/icosa.py that
 changes ids (or a DuckDB float-semantics change) fails here, not as an
 opaque hash mismatch in the driver gate.
 
-No Spark session needed: numpy vs DuckDB directly.
+The S2/icosa cases need no Spark session (numpy vs DuckDB directly); the
+cell_grid cases run ``encode_cells``/``grid_cell_col`` on Spark against
+the oracle's DuckDB grid expression.
 """
 
 import re
@@ -83,3 +85,74 @@ def test_icosa_sql_matches_numpy(points):
     _, hex_sql = _cells_via_sql(lon, lat)
     want = icosa_cell(lon, lat, 7).astype(np.int64)
     assert (hex_sql.astype(np.int64) == want).all()
+
+
+def _oracle_grid_expr() -> str:
+    """The oracle's DuckDB cell_grid expression, cut out of the
+    doc_points_tiles query so the test reads the SQL the gate runs."""
+    sql = E.oracle_sql()["doc_points_tiles"]
+    m = re.search(r"AS tile_y,(.*)AS cell_grid", sql, re.S)
+    assert m, "doc_points_tiles oracle SQL changed; update this test's splice"
+    return m.group(1)
+
+
+def _grid_edge_points():
+    rng = np.random.default_rng(23)
+    lon_b = np.arange(-180.0, 180.0 + 4.0, 4.0)  # every column boundary
+    lat_b = np.arange(-90.0, 90.0 + 4.0, 4.0)  # every row boundary
+    lon_edges = np.concatenate([lon_b, np.nextafter(lon_b, -np.inf), np.nextafter(lon_b, np.inf)])
+    lat_edges = np.concatenate([lat_b, np.nextafter(lat_b, -np.inf), np.nextafter(lat_b, np.inf)])
+    out_lon = np.array([180.5, 200.0, 540.0, 1e6, -180.5, -200.0, -540.0, -1e6])
+    out_lat = np.array([90.5, 95.0, 1e6, -90.5, -95.0, -1e6])
+    lon = np.concatenate([
+        rng.uniform(-180, 180, 4000),
+        lon_edges, rng.uniform(-180, 180, lat_edges.size),
+        out_lon, np.zeros(out_lat.size), out_lon[:out_lat.size],
+    ])
+    lat = np.concatenate([
+        rng.uniform(-90, 90, 4000),
+        rng.uniform(-90, 90, lon_edges.size), lat_edges,
+        np.zeros(out_lon.size), out_lat, out_lat,
+    ])
+    return lon, lat
+
+
+def test_cell_grid_matches_oracle_sql(spark):
+    from stac_populator_spark.operators.cells import encode_cells
+
+    lon, lat = _grid_edge_points()
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE pts AS SELECT * FROM (SELECT unnest(?) AS lon, unnest(?) AS lat, unnest(?) AS rid)",
+        [lon.tolist(), lat.tolist(), list(range(len(lon)))],
+    )
+    want = con.execute(f"SELECT {_oracle_grid_expr()} FROM pts ORDER BY rid").fetchnumpy()
+    want = next(iter(want.values())).astype(np.int64)
+    pts = spark.createDataFrame(
+        [(i, float(x), float(y)) for i, (x, y) in enumerate(zip(lon, lat))],
+        "rid long, lon double, lat double",
+    )
+    got = np.array(
+        [r[0] for r in encode_cells(pts).orderBy("rid").select("cell_grid").collect()],
+        dtype=np.int64,
+    )
+    assert (got == want).all(), list(zip(lon[got != want], lat[got != want]))
+
+
+def test_cell_grid_of_missing_or_non_finite_points(spark):
+    from pyspark.sql import functions as F
+
+    from stac_populator_spark.operators.cells import encode_cells, grid_cell_col
+
+    nan, inf = float("nan"), float("inf")
+    rows = [(0, None, 1.0), (1, 1.0, None), (2, nan, 1.0), (3, 1.0, nan),
+            (4, inf, 1.0), (5, 1.0, -inf), (6, 1.0, 1.0)]
+    pts = spark.createDataFrame(rows, "rid long, lon double, lat double")
+    got = {
+        r["rid"]: r["g"]
+        for r in pts.select("rid", grid_cell_col("lon", "lat").alias("g")).collect()
+    }
+    assert got == {0: -1, 1: -1, 2: -1, 3: -1, 4: -1, 5: -1, 6: 45 * 1000 + 22}
+    # encode_cells keeps null geometry null
+    enc = encode_cells(pts.filter(F.col("rid") <= 1)).select("cell_grid").collect()
+    assert [r[0] for r in enc] == [None, None]

@@ -28,6 +28,7 @@ def cf_df(spark):
     return spark.createDataFrame(rows, "path string, value string")
 
 
+@pytest.mark.requires_reference(REF_DATA)
 def test_rdps_geospatial_values():
     doc = json.load(open(os.path.join(REF_DATA, "rdps.json")))
     item = parse_cf_document(doc, fallback_id="rdps")
@@ -46,6 +47,7 @@ def test_rdps_geospatial_values():
     assert "HTTPServer" in item["access_urls"]
 
 
+@pytest.mark.requires_reference(REF_DATA)
 def test_all_fixtures_through_engine(spark, cf_df):
     items = cf_items(cf_df)
     rows = {r["id"] or r["bbox"] and "?": r for r in items.collect()}
@@ -59,6 +61,7 @@ def test_all_fixtures_through_engine(spark, cf_df):
         assert r["start_datetime"] is not None
 
 
+@pytest.mark.requires_reference(REF_DATA)
 def test_datacube_classification_on_rdps(spark, cf_df):
     rdps = cf_items(cf_df.filter(F.col("path") == "rdps.json"))
     out = with_datacube(rdps).select("cube_dimensions", "cube_variables").collect()[0]
@@ -72,6 +75,7 @@ def test_datacube_classification_on_rdps(spark, cf_df):
     assert vars_["time"]["var_type"] == "auxiliary"
 
 
+@pytest.mark.requires_reference(REF_DATA)
 def test_assets_from_fixture_access_urls(spark, cf_df):
     items = cf_items(cf_df.filter(F.col("path") == "rdps.json"))
     assets = items.select(assets_from_access_urls(F.col("access_urls")).alias("a")).collect()[0]["a"]

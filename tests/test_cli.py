@@ -76,6 +76,11 @@ def test_update_collection_verb(spark, tree):
     assert rc == 0
     ext = spark.read.parquet(f"{tree}/agg/extents")
     assert ext.count() > 0 and "bbox" in ext.columns
+    # same collections as run's own: the null-collection items stay out
+    run_cols = spark.read.parquet(f"{tree}/out/collections")
+    got = [r[0] for r in ext.select("collection_id").collect()]
+    assert None not in got
+    assert sorted(got) == sorted(r[0] for r in run_cols.select("collection_id").collect())
 
 
 def test_runlog_records_match_dead_letter_table(spark, tree):

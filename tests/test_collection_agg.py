@@ -17,6 +17,7 @@ from stac_populator_spark.operators.collection_agg import (
     collection_extent,
     collection_summaries,
     merge_with_initial,
+    update_collections,
     wgs84_violations,
 )
 
@@ -103,6 +104,24 @@ def test_datetime_overrides_start_end(spark):
     ext = collection_extent(_mk_items(spark, rows)).collect()[0]
     assert ext["interval_start"] == _ts("2030-06-01")
     assert ext["interval_end"] == _ts("2030-06-01")
+
+
+def test_update_collections_leave_null_collection_items_out(spark):
+    # run keeps geometry-less and footprint-unmatched pages as items with a
+    # null collection_id; no aggregate may come out keyed on null
+    items = _four_items_df(spark).unionByName(_mk_items(spark, [
+        (None, 100.0, 60.0, 101.0, 61.0, None, _ts("1900-01-01"), _ts("1901-01-01"), {"ducks": "Pekin"}),
+        (None, None, None, None, None, None, None, None, {"ducks": "Call"}),
+    ]))
+    out = update_collections(items, "all")
+    ext = out["extents"].collect()
+    assert [r["collection_id"] for r in ext] == ["c1"]
+    assert list(ext[0]["bbox"]) == [-11.0, -20.0, 56.0, 50.0]
+    assert ext[0]["item_count"] == 4
+    summ = out["summaries"]
+    assert summ.filter(F.col("collection_id").isNull()).count() == 0
+    ducks = summ.filter(F.col("prop") == "ducks").collect()
+    assert [list(r["values"]) for r in ducks] == [["Alabio", "Blekinge", "Muscovy", "Rouen"]]
 
 
 THREE_ITEMS = [

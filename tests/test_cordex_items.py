@@ -10,6 +10,8 @@ from stac_populator_spark.operators.cordex6 import cordex6_item_dict, cordex6_ui
 RAW = "/root/reference/tests/data/cordex6_raw.json"
 NCML = "/root/reference/tests/data/cordex6_ncml.json"
 
+pytestmark = pytest.mark.requires_reference(RAW, NCML)
+
 
 @pytest.fixture(scope="module")
 def raw_attrs():

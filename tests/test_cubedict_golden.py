@@ -11,6 +11,8 @@ from stac_populator_spark.sources.ncml import ncml_to_cf_dict
 
 DATA = "/root/reference/tests/data"
 
+pytestmark = pytest.mark.requires_reference(DATA)
+
 # the reference conftest's 0-360 WKT fixture (tests/conftest.py:5-60)
 WKT_0_360 = """
     GEOGCRS["WGS 84",

@@ -17,6 +17,8 @@ CASSETTE = (
 )
 GOLDEN = "/root/reference/tests/data/stac_item_testdata_xclim_cmip6_ncml.json"
 
+pytestmark = pytest.mark.requires_reference(CASSETTE, GOLDEN)
+
 THREDDS_URL = "https://pavics.ouranos.ca/twitcher/ows/proxy/thredds"
 THREDDS_PATH = "birdhouse/testdata/xclim/cmip6"
 THREDDS_NC = "sic_SImon_CCCma-CanESM5_ssp245_r13i1p2f1_2020.nc"

@@ -51,6 +51,18 @@ def test_partition_pruning_on_cell(spark, items_path):
     assert df.select("cell_coarse").distinct().count() == 1
 
 
+def test_coarse_cell_is_the_level4_s2_parent(spark, items_path):
+    import numpy as np
+
+    from stac_populator_spark.functions.s2 import s2_parent
+
+    rows = read_items(spark, items_path).select("cell_s2", "cell_coarse").collect()
+    cells = np.array([r[0] or 0 for r in rows], dtype=np.int64)
+    want = np.where(cells == 0, 0, s2_parent(cells, 4))
+    assert (cells != 0).any()
+    assert (np.array([r[1] for r in rows], dtype=np.int64) == want).all()
+
+
 def test_roundtrip_preserves_rows(spark, items_path):
     items = encode_cells(extract_items(pages_df(spark, 800, partitions=2)))
     assert read_items(spark, items_path).count() == items.count()

@@ -242,3 +242,21 @@ def test_domain_budget_single_window_exchange(spark):
     plan = plan_of(E.queries()["domain_budget"](spark, "/root/testdata/sf0.001"))
     assert plan.count(" Exchange (") == 1
     assert "Window" in plan
+
+
+def test_point_grid_cell_stays_in_the_jvm(spark):
+    # the point→grid formula is a JVM expression (cells.grid_cell_col):
+    # doc_points_tiles crosses into Python nowhere, and the pip-refined
+    # queries only for the exact="pip" ring test
+    import __spark_entry__ as E
+
+    def python_nodes(df) -> int:
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            df.explain()  # simple mode: each physical node printed once
+        return buf.getvalue().count("ArrowEvalPython")
+
+    sf = "/root/testdata/sf0.001"
+    assert python_nodes(E._doc_points_tiles(spark, sf)) == 0
+    assert python_nodes(E._pip_points(spark, sf)) == 1
+    assert python_nodes(E._stac_collections_items(spark, sf)) == 1

@@ -1,6 +1,7 @@
 """PII redaction + benchmark decontamination (operators/scrub.py)."""
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from stac_populator_spark.operators.scrub import decontaminate, redact_pii
@@ -49,6 +50,19 @@ def test_decontaminate_routes_overlapping_docs(spark):
     assert set(cont_rows) == {2}
     assert cont_rows[2] >= 4  # the embedded eval doc contributes its grams
     assert sorted(r["doc_id"] for r in clean.collect()) == [1, 3]
+
+
+def test_decontaminate_refuses_an_eval_set_above_the_bound(spark, monkeypatch):
+    from stac_populator_spark.operators import scrub
+
+    monkeypatch.setattr(scrub, "MAX_EVAL_DOCS", 2)
+    docs = spark.createDataFrame(
+        pd.DataFrame({"doc_id": [1, 2, 3], "text": ["a b c d e f"] * 3})
+    )
+    with pytest.raises(ValueError, match="more than 2 rows"):
+        decontaminate(docs, docs)
+    clean, cont = decontaminate(docs, docs.limit(2))
+    assert cont.count() == 3 and clean.count() == 0
 
 
 def test_decontaminate_corpus_gram_stage_is_narrow(spark):

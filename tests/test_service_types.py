@@ -6,6 +6,7 @@ hold as a column expression."""
 import re
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from stac_populator_spark.operators.extensions import (
@@ -16,20 +17,57 @@ from stac_populator_spark.operators.extensions import (
 
 REF_STAC_UTILS = "/root/reference/STACpopulator/stac_utils.py"
 
+# the reference's ServiceType enum (28 kinds), member name → value, frozen
+# from STACpopulator/stac_utils.py:315-345 so the table check runs without
+# the reference checkout; test_frozen_enum_matches_reference_source
+# re-reads it
+REFERENCE_ENUM = {
+    "adde": "ADDE",
+    "dap4": "DAP4",
+    "dods": "DODS",
+    "opendap": "OpenDAP",
+    "opendapg": "OpenDAPG",
+    "netcdfsubset": "NetcdfSubset",
+    "netcdfsubsetgrid": "NetcdfSubsetGrid",
+    "netcdfsubsetpoint": "NetcdfSubsetPoint",
+    "cdmremote": "CdmRemote",
+    "cdmfeature": "CdmFeature",
+    "ncjson": "ncJSON",
+    "h5service": "H5Service",
+    "httpserver": "HTTPServer",
+    "ftp": "FTP",
+    "gridftp": "GridFTP",
+    "file": "File",
+    "iso": "ISO",
+    "las": "LAS",
+    "ncml": "NcML",
+    "uddc": "UDDC",
+    "wcs": "WCS",
+    "wms": "WMS",
+    "wsdl": "WSDL",
+    "webform": "WebForm",
+    "catalog": "Catalog",
+    "compound": "Compound",
+    "resolver": "Resolver",
+    "thredds": "THREDDS",
+}
+
 
 def _reference_enum() -> dict:
     """Parse the ServiceType members straight out of the reference source
-    (name = "Value" lines inside the enum body) — a live parity check, not
-    a hand-copied list."""
+    (name = "Value" lines inside the enum body)."""
     src = open(REF_STAC_UTILS).read()
     body = src.split("class ServiceType", 1)[1].split("@classmethod", 1)[0]
     return dict(re.findall(r'^\s{4}(\w+) = "([^"]+)"', body, re.M))
 
 
 def test_canonical_table_covers_full_reference_enum():
-    ref = _reference_enum()
-    assert len(ref) >= 27  # the reference enumerates 28 service kinds
-    assert SERVICE_CANONICAL == ref
+    assert SERVICE_CANONICAL == REFERENCE_ENUM
+
+
+@pytest.mark.requires_reference(REF_STAC_UTILS)
+def test_frozen_enum_matches_reference_source():
+    assert _reference_enum() == REFERENCE_ENUM
 
 
 def test_from_value_semantics(spark):
