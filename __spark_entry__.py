@@ -249,7 +249,7 @@ def _pip_points(spark, sf_dir):
     fps["bbox"] = fps[["lon_min", "lat_min", "lon_max", "lat_max"]].values.tolist()
     fps["ring"] = None
     cover = footprint_cover_df(spark, fps[["collection_id", "bbox", "ring"]])
-    return pip_join(pts, cover, exact="pip").select("doc_id", "collection_id")
+    return pip_join(pts, cover, exact="rect").select("doc_id", "collection_id")
 
 
 def _tiles_footprints(spark, sf_dir):
@@ -888,7 +888,7 @@ def _stac_collections_items(spark, sf_dir):
     fps["bbox"] = fps[["lon_min", "lat_min", "lon_max", "lat_max"]].values.tolist()
     fps["ring"] = None
     cover = footprint_cover_df(spark, fps[["collection_id", "bbox", "ring"]])
-    matched = pip_join(pts, cover, exact="pip")
+    matched = pip_join(pts, cover, exact="rect")
     return (
         matched.withColumn("lon_min", F.col("lon"))
         .withColumn("lat_min", F.col("lat"))

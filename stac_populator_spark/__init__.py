@@ -15,3 +15,10 @@ reference repo's observable behavior, and published S2/Hilbert-curve math.
 """
 
 __version__ = "0.1.0"
+
+from . import zipguard as _zipguard
+
+# Spark's Python workers import this package when they unpickle an engine
+# kernel: from then on they skip re-reading unchanged zip archives before
+# each task (see zipguard)
+_zipguard.install()

@@ -60,7 +60,6 @@ def redact_pii(df: DataFrame, text_col: str = "text",
     verified identical at sf0.01/0.1/1.0. Column pruning note: pass only
     the columns you need — everything in ``df`` crosses the Arrow
     boundary (Catalyst cannot prune through mapInArrow)."""
-    import pyarrow as pa
     from pyspark.sql import types as T
 
     schema = T.StructType(
@@ -68,29 +67,32 @@ def redact_pii(df: DataFrame, text_col: str = "text",
         + [T.StructField(f"n_{name}", T.IntegerType()) for name in PII_PATTERNS]
         + [T.StructField(out_col, T.StringType())]
     )
-    items = list(PII_PATTERNS.items())
+    names = schema.fieldNames()
 
     def run(batches):
-        import pyarrow.compute as pc
-
         for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            red = batch.column(text_col)
-            if not pa.types.is_string(red.type):
-                red = pc.cast(red, pa.string())
-            arrays = list(batch.columns)
-            for name, pat in items:
-                arrays.append(pc.cast(
-                    pc.count_substring_regex(red, pattern=pat), pa.int32()
-                ))
-                red = pc.replace_substring_regex(
-                    red, pattern=pat, replacement=f"<{name.upper()}>"
-                )
-            arrays.append(red)
-            yield pa.RecordBatch.from_arrays(arrays, names=schema.fieldNames())
+            if batch.num_rows:
+                yield _redact_batch(batch, text_col, names)
 
     return df.mapInArrow(run, schema=schema)
+
+
+def _redact_batch(batch, text_col: str, names: list):
+    """One Arrow batch of :func:`redact_pii`: the input columns, then the
+    ``n_<class>`` counts, then the redacted text. A module-level function,
+    so a worker that unpickles the kernel imports the engine package."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    red = batch.column(text_col)
+    if not pa.types.is_string(red.type):
+        red = pc.cast(red, pa.string())
+    arrays = list(batch.columns)
+    for name, pat in PII_PATTERNS.items():
+        arrays.append(pc.cast(pc.count_substring_regex(red, pattern=pat), pa.int32()))
+        red = pc.replace_substring_regex(red, pattern=pat, replacement=f"<{name.upper()}>")
+    arrays.append(red)
+    return pa.RecordBatch.from_arrays(arrays, names=names)
 
 
 def words_col(text_col) -> F.Column:

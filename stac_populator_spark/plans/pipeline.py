@@ -92,8 +92,9 @@ def split_validated(validated: DataFrame, cover: DataFrame,
     items = finish_items(validated.filter(reason.isNull()).drop("failure_reason"),
                          cover, exact=exact)
     dead = validated.filter(reason.isNotNull())
+    dead_cols = set(dead.columns)
     errors = dead.select(
-        *[F.col(f.name) if f.name in dead.columns
+        *[F.col(f.name) if f.name in dead_cols
           else F.lit(None).cast(f.dataType).alias(f.name)
           for f in items.schema.fields],
         reason,

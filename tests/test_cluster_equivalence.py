@@ -4,6 +4,7 @@ between local[N] threads and a process-isolated local-cluster topology
 --py-files) — the north rule's deployment shape. Complements the
 cross-parallelism invariant (test_pipeline.py) which stays in one JVM."""
 
+import json
 import os
 import subprocess
 import sys
@@ -37,6 +38,24 @@ rows = sorted(
 import hashlib, json
 h = hashlib.md5(json.dumps(rows, default=str).encode()).hexdigest()
 print(f"ROWS={{len(rows)}} HASH={{h}}", flush=True)
+
+
+def probe(batches):
+    # reports, without importing it, where this worker loaded the engine
+    # from and whether zipimport's guard is in place
+    import sys, zipimport
+    import pyarrow as pa
+    for _ in batches:
+        pass
+    engine = sys.modules.get("stac_populator_spark")
+    yield pa.RecordBatch.from_pydict({{
+        "engine": [getattr(engine, "__file__", None) or ""],
+        "guarded": [hasattr(zipimport.zipimporter.invalidate_caches, "stamps")],
+    }})
+
+
+workers = spark.range(0, 8, 1, 8).mapInArrow(probe, "engine string, guarded boolean").collect()
+print("WORKERS=" + json.dumps([[w.engine, w.guarded] for w in workers]), flush=True)
 try:
     spark.stop()
 except Exception:
@@ -52,12 +71,20 @@ def _run(repo, master, pages_path):
     )
     lines = [ln for ln in r.stdout.splitlines() if ln.startswith("ROWS=")]
     assert lines, r.stderr[-3000:]
-    return lines[-1]
+    workers = [ln for ln in r.stdout.splitlines() if ln.startswith("WORKERS=")]
+    assert workers, r.stderr[-3000:]
+    return lines[-1], json.loads(workers[-1][len("WORKERS="):])
 
 
 def test_local_cluster_output_identical(tmp_path):
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     pages_path = str(tmp_path / "pages.parquet")
-    threads = _run(repo, "local[4]", pages_path)
-    cluster = _run(repo, "local-cluster[2,2,2048]", pages_path)
+    threads, _ = _run(repo, "local[4]", pages_path)
+    cluster, workers = _run(repo, "local-cluster[2,2,2048]", pages_path)
     assert threads == cluster
+    # the executors' Python workers loaded the engine from the shipped zip
+    # (the tools/submit.sh launch mode), and loading it installed the
+    # zip-directory guard (stac_populator_spark.zipguard)
+    loaded = [guarded for engine, guarded in workers if engine]
+    assert loaded and all(".zip" in engine for engine, _ in workers if engine), workers
+    assert all(loaded), workers

@@ -245,9 +245,9 @@ def test_domain_budget_single_window_exchange(spark):
 
 
 def test_point_grid_cell_stays_in_the_jvm(spark):
-    # the point→grid formula is a JVM expression (cells.grid_cell_col):
-    # doc_points_tiles crosses into Python nowhere, and the pip-refined
-    # queries only for the exact="pip" ring test
+    # the point→grid formula is a JVM expression (cells.grid_cell_col) and
+    # the nation footprints are boxes, refined with the JVM exact="rect"
+    # between-predicates: none of these queries crosses into Python
     import __spark_entry__ as E
 
     def python_nodes(df) -> int:
@@ -258,5 +258,5 @@ def test_point_grid_cell_stays_in_the_jvm(spark):
 
     sf = "/root/testdata/sf0.001"
     assert python_nodes(E._doc_points_tiles(spark, sf)) == 0
-    assert python_nodes(E._pip_points(spark, sf)) == 1
-    assert python_nodes(E._stac_collections_items(spark, sf)) == 1
+    assert python_nodes(E._pip_points(spark, sf)) == 0
+    assert python_nodes(E._stac_collections_items(spark, sf)) == 0
