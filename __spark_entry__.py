@@ -58,6 +58,17 @@ def _nation_footprints(spark: SparkSession, sf_dir: str) -> DataFrame:
         (lat_min + 8 + (F.col("n_nationkey") % 7)).alias("f_lat_max"),
     )
 
+
+def _nation_cover(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Broadcast cover of the nation footprints (boxes: null rings)."""
+    from stac_populator_spark.operators.spatial_join import footprint_cover_df
+
+    fps = _nation_footprints(spark, sf_dir).toPandas()
+    fps = fps.rename(columns={c: c[2:] for c in ("f_lon_min", "f_lat_min", "f_lon_max", "f_lat_max")})
+    fps["bbox"] = fps[["lon_min", "lat_min", "lon_max", "lat_max"]].values.tolist()
+    fps["ring"] = None
+    return footprint_cover_df(spark, fps[["collection_id", "bbox", "ring"]])
+
 _FOOTPRINTS_SQL = (
     "SELECT 'col-' || CAST(n_nationkey AS VARCHAR) AS collection_id, "
     "((n_nationkey*67)%300) - 159.5 AS f_lon_min, "
@@ -107,17 +118,12 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship: sf0.001 documents → derived pages → full STAC pipeline."""
     from stac_populator_spark.datagen import pages_from_documents
     from stac_populator_spark.plans.pipeline import build_items
-    from stac_populator_spark.operators.spatial_join import footprint_cover_df
 
     sf_dir = "/root/testdata/sf0.001"
     docs = _t(spark, sf_dir, "documents")
     pages = pages_from_documents(docs)
-    fps = _nation_footprints(spark, sf_dir).toPandas()
-    fps = fps.rename(columns={c: c[2:] for c in ("f_lon_min", "f_lat_min", "f_lon_max", "f_lat_max")})
-    fps["bbox"] = fps[["lon_min", "lat_min", "lon_max", "lat_max"]].values.tolist()
-    fps["ring"] = None
-    cover = footprint_cover_df(spark, fps[["collection_id", "bbox", "ring"]])
-    items = build_items(pages, cover, exact="rect")
+    cover = _nation_cover(spark, sf_dir)
+    items = build_items(pages, cover)
     return items.select(
         "id", "url", "lang", "collection_id", "cell_s2", "cell_hex", "tile_id", "bbox", "stac_json"
     )
@@ -239,17 +245,13 @@ def _doc_points_tiles(spark, sf_dir):
 
 def _pip_points(spark, sf_dir):
     from stac_populator_spark.operators.cells import grid_cell_col
-    from stac_populator_spark.operators.spatial_join import footprint_cover_df, pip_join
+    from stac_populator_spark.operators.spatial_join import pip_join
 
     pts = _doc_points(_t(spark, sf_dir, "documents")).withColumn(
         "cell_grid", grid_cell_col("lon", "lat")
     )
-    fps = _nation_footprints(spark, sf_dir).toPandas()
-    fps = fps.rename(columns={c: c[2:] for c in ("f_lon_min", "f_lat_min", "f_lon_max", "f_lat_max")})
-    fps["bbox"] = fps[["lon_min", "lat_min", "lon_max", "lat_max"]].values.tolist()
-    fps["ring"] = None
-    cover = footprint_cover_df(spark, fps[["collection_id", "bbox", "ring"]])
-    return pip_join(pts, cover, exact="rect").select("doc_id", "collection_id")
+    cover = _nation_cover(spark, sf_dir)
+    return pip_join(pts, cover).select("doc_id", "collection_id")
 
 
 def _tiles_footprints(spark, sf_dir):
@@ -873,7 +875,7 @@ def _stac_collections_items(spark, sf_dir):
     join — zero joins, zero exchanges before the final aggregation
     (pinned in tests/test_plans.py)."""
     from stac_populator_spark.operators.cells import grid_cell_col
-    from stac_populator_spark.operators.spatial_join import footprint_cover_df, pip_join
+    from stac_populator_spark.operators.spatial_join import pip_join
 
     docs = _t(spark, sf_dir, "documents")
     pts = docs.select(
@@ -883,12 +885,8 @@ def _stac_collections_items(spark, sf_dir):
         (((F.col("doc_id") * 37) % 3600) / 10.0 - 179.95).alias("lon"),
         (((F.col("doc_id") * 53) % 1700) / 10.0 - 84.95).alias("lat"),
     ).withColumn("cell_grid", grid_cell_col("lon", "lat"))
-    fps = _nation_footprints(spark, sf_dir).toPandas()
-    fps = fps.rename(columns={c: c[2:] for c in ("f_lon_min", "f_lat_min", "f_lon_max", "f_lat_max")})
-    fps["bbox"] = fps[["lon_min", "lat_min", "lon_max", "lat_max"]].values.tolist()
-    fps["ring"] = None
-    cover = footprint_cover_df(spark, fps[["collection_id", "bbox", "ring"]])
-    matched = pip_join(pts, cover, exact="rect")
+    cover = _nation_cover(spark, sf_dir)
+    matched = pip_join(pts, cover)
     return (
         matched.withColumn("lon_min", F.col("lon"))
         .withColumn("lat_min", F.col("lat"))
@@ -1004,16 +1002,11 @@ def _stac_flagship(spark, sf_dir):
     projection SQL) bit-exactly (see ``_flagship_oracle_sql``)."""
     from stac_populator_spark.datagen import pages_from_documents
     from stac_populator_spark.plans.pipeline import build_items
-    from stac_populator_spark.operators.spatial_join import footprint_cover_df
 
     docs = _t(spark, sf_dir, "documents")
     pages = pages_from_documents(docs)
-    fps = _nation_footprints(spark, sf_dir).toPandas()
-    fps = fps.rename(columns={c: c[2:] for c in ("f_lon_min", "f_lat_min", "f_lon_max", "f_lat_max")})
-    fps["bbox"] = fps[["lon_min", "lat_min", "lon_max", "lat_max"]].values.tolist()
-    fps["ring"] = None
-    cover = footprint_cover_df(spark, fps[["collection_id", "bbox", "ring"]])
-    items = build_items(pages, cover, exact="rect")
+    cover = _nation_cover(spark, sf_dir)
+    items = build_items(pages, cover)
     return items.select("id", "collection_id", "cell_s2", "cell_hex", "tile_id", "stac_json")
 
 
@@ -1217,16 +1210,11 @@ def _stac_items_sql(spark, sf_dir):
     as the fast mirror."""
     from stac_populator_spark.datagen import pages_from_documents
     from stac_populator_spark.plans.pipeline import build_items
-    from stac_populator_spark.operators.spatial_join import footprint_cover_df
 
     docs = _t(spark, sf_dir, "documents")
     pages = pages_from_documents(docs)
-    fps = _nation_footprints(spark, sf_dir).toPandas()
-    fps = fps.rename(columns={c: c[2:] for c in ("f_lon_min", "f_lat_min", "f_lon_max", "f_lat_max")})
-    fps["bbox"] = fps[["lon_min", "lat_min", "lon_max", "lat_max"]].values.tolist()
-    fps["ring"] = None
-    cover = footprint_cover_df(spark, fps[["collection_id", "bbox", "ring"]])
-    items = build_items(pages, cover, exact="rect")
+    cover = _nation_cover(spark, sf_dir)
+    items = build_items(pages, cover)
     return items.select("id", "collection_id", "tile_id", "n_chars", "stac_json")
 
 

@@ -97,18 +97,6 @@ def to_geometry(lon_min: float, lat_min: float, lon_max: float, lat_max: float,
     }
 
 
-def split_rings_at_antimeridian(lon_min: float, lat_min: float,
-                                lon_max: float, lat_max: float) -> list:
-    """Ring list for join-side geometry: one bbox ring, or two when the box
-    crosses the antimeridian. Each entry is [[lon,lat]×5]."""
-    if crosses_antimeridian(lon_min, lon_max):
-        return [
-            linear_ring(lon_min, lat_min, 180.0, lat_max),
-            linear_ring(-180.0, lat_min, lon_max, lat_max),
-        ]
-    return [linear_ring(lon_min, lat_min, lon_max, lat_max)]
-
-
 def haversine_km(lon1, lat1, lon2, lat2):
     """Vectorized great-circle distance (numpy, km). Used by kNN ranking."""
     lon1, lat1, lon2, lat2 = (np.radians(np.asarray(a, dtype=np.float64))

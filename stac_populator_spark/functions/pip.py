@@ -2,9 +2,10 @@
 
 The sandbox has no shapely (SURVEY.md §7.0); footprint polygons are ring
 arrays in the same nesting shape as the reference's GeoJSON models
-(/root/reference/STACpopulator/models.py:29-49). This kernel refines the
-coarse cell-join candidates produced by the broadcast spatial join (J5 in
-SURVEY.md §2.4) to exact containment.
+(/root/reference/STACpopulator/models.py:29-49). The broadcast spatial join
+(J5 in SURVEY.md §2.4) does not call this kernel: it refines in the JVM
+(``operators.spatial_join._in_ring``) with the same operation order, and
+this function is the reference the tests hold that refine to, bit for bit.
 """
 
 from __future__ import annotations
@@ -35,22 +36,3 @@ def points_in_ring(lons: np.ndarray, lats: np.ndarray, ring) -> np.ndarray:
     crossings = straddles & (lons[:, None] < xint)
     return (crossings.sum(axis=1) % 2).astype(bool)
 
-
-def points_in_rings(lons: np.ndarray, lats: np.ndarray, rings) -> np.ndarray:
-    """Any-ring containment for antimeridian-split footprints (list of
-    rings, as geometry.split_rings_at_antimeridian emits)."""
-    out = np.zeros(np.asarray(lons).shape, dtype=bool)
-    for ring in rings:
-        out |= points_in_ring(lons, lats, ring)
-    return out
-
-
-def bbox_intersects(amin_x, amin_y, amax_x, amax_y, bmin_x, bmin_y, bmax_x, bmax_y):
-    """Vectorized closed-interval bbox intersection test (tile↔footprint
-    assignment, J7 in SURVEY.md §2.4)."""
-    return (
-        (np.asarray(amin_x) <= np.asarray(bmax_x))
-        & (np.asarray(amax_x) >= np.asarray(bmin_x))
-        & (np.asarray(amin_y) <= np.asarray(bmax_y))
-        & (np.asarray(amax_y) >= np.asarray(bmin_y))
-    )

@@ -42,15 +42,3 @@ def partition_metrics(df: DataFrame, byte_cols: tuple = (),
         .orderBy("partition_id")
     )
 
-
-def observed_counts(df: DataFrame, name: str = "metrics"):
-    """Attach an ``observe`` node counting rows + null-geometry rows; the
-    driver reads the observation after the action (Spark-native analogue of
-    the ingest counter/failure totals, populators.py:258-303)."""
-    from pyspark.sql import Observation
-
-    obs = Observation(name)
-    cols = [F.count(F.lit(1)).alias("rows")]
-    if "lon" in df.columns:
-        cols.append(F.sum(F.col("lon").isNull().cast("long")).alias("null_geometry"))
-    return df.observe(obs, *cols), obs

@@ -4,17 +4,18 @@ Strategy (scale-first):
 1. **Cover** every footprint polygon with coarse grid cells (driver-side —
    the footprint dimension is small by construction, like the reference's
    collection config /root/reference/STACpopulator/populators.py:156-200).
-   Antimeridian-crossing footprints are pre-split into two rectangles
-   (reference split rule stac_utils.py:230-251), so every cover entry is a
-   simple lon-interval box.
+   Antimeridian-crossing footprints are pre-split into two parts (reference
+   split rule stac_utils.py:230-251), so every cover entry's bbox is a
+   simple lon-interval box. A cover row also carries its ring's ``edges``,
+   which are null when the ring is its bbox (or absent).
 2. **Broadcast** the (cell → footprint) cover table and equi-join items on
-   ``cell_grid`` — no shuffle of the fact side at all; the big table
-   streams through a BroadcastHashJoin inside whole-stage codegen.
-3. **Refine** candidates:
-   - rectangle footprints: pure JVM column predicate (between) — the fast
-     path, stays in codegen;
-   - general rings: vectorized numpy ray-casting pandas UDF
-     (functions.pip), batched via Arrow.
+   ``cell_grid`` — no shuffle of the fact side at all; every partition
+   probes the same hash table.
+3. **Refine** candidates in the join condition, with one JVM predicate the
+   cover row decides: the closed-interval bbox test, and for a row with
+   ``edges`` also the even-odd ray cast over them (``_in_ring``, the
+   operation order of ``functions.pip.points_in_ring``). A box footprint
+   skips the ray cast; no row crosses into Python.
 
 At 100 TB the only data movement is the broadcast of the tiny cover table;
 item rows never shuffle. Skewed cells (oceans/megacities) don't matter for
@@ -23,17 +24,32 @@ a broadcast join — every partition probes the same hash table.
 
 from __future__ import annotations
 
-import json
-
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
-from ..functions.pip import points_in_ring
 from .cells import GRID_DEG, grid_cell_col
+
+# one cover row: a grid cell of one footprint part, the part's bbox and
+# its ring edges (null for a box ring, so the refine is the bbox test)
+COVER_SCHEMA = T.StructType(
+    [
+        T.StructField("cell_grid", T.LongType()),
+        T.StructField("collection_id", T.StringType()),
+        T.StructField("f_lon_min", T.DoubleType()),
+        T.StructField("f_lat_min", T.DoubleType()),
+        T.StructField("f_lon_max", T.DoubleType()),
+        T.StructField("f_lat_max", T.DoubleType()),
+        T.StructField(
+            "edges",
+            T.ArrayType(T.StructType(
+                [T.StructField(n, T.DoubleType()) for n in ("x1", "y1", "x2", "y2")]
+            )),
+        ),
+    ]
+)
 
 
 def _cover_box(lon_min: float, lat_min: float, lon_max: float, lat_max: float,
@@ -47,29 +63,50 @@ def _cover_box(lon_min: float, lat_min: float, lon_max: float, lat_max: float,
     return [gx * 1000 + gy for gx in range(gx0, gx1 + 1) for gy in range(gy0, gy1 + 1)]
 
 
+def _is_box(ring: np.ndarray, lon_min: float, lat_min: float,
+            lon_max: float, lat_max: float) -> bool:
+    """True when the ring's distinct vertices are exactly the bbox corners."""
+    corners = {(lon_min, lat_min), (lon_min, lat_max), (lon_max, lat_max), (lon_max, lat_min)}
+    return {(x, y) for x, y in ring.tolist()} == corners
+
+
+def _edges(ring: np.ndarray) -> list[dict]:
+    """Consecutive vertex pairs of the ring, as ``points_in_ring`` reads
+    them; none for a ring it treats as empty (fewer than 4 vertices)."""
+    if len(ring) < 4:
+        return []
+    return [
+        {"x1": x1, "y1": y1, "x2": x2, "y2": y2}
+        for (x1, y1), (x2, y2) in zip(ring[:-1].tolist(), ring[1:].tolist())
+    ]
+
+
 def footprint_cover_pdf(footprints: pd.DataFrame, grid_deg: float = GRID_DEG) -> pd.DataFrame:
     """footprints(collection_id, bbox [lon_min,lat_min,lon_max,lat_max],
-    ring) → cover rows (cell_grid, collection_id, part lon/lat bounds,
-    ring_json). Crossing footprints yield two parts (split at ±180)."""
+    ring) → cover rows (``COVER_SCHEMA``).
+
+    ``edges`` is null when the ring is null or a box over the bbox corners;
+    otherwise it holds the ring's edges. A crossing footprint yields two
+    parts, [lon_min, 180] and [-180, lon_max]; a general ring's lons are
+    unwrapped to [lon_min, lon_max + 360] and used as they are for the
+    first part and shifted by -360 for the second."""
     rows = []
     for _, fp in footprints.iterrows():
         lon_min, lat_min, lon_max, lat_max = [float(v) for v in fp["bbox"]]
         crossing = lon_min > lon_max
+        ring = fp.get("ring")
+        if ring is not None:  # (n, 2) lon/lat vertices
+            ring = np.asarray([list(v)[:2] for v in ring], dtype=np.float64).reshape(-1, 2)
+        if ring is None or _is_box(ring, lon_min, lat_min, lon_max, lat_max):
+            ring = None
+        elif crossing:  # unwrap the lons to [lon_min, lon_max + 360]
+            ring[:, 0] = np.where(ring[:, 0] < lon_min, ring[:, 0] + 360.0, ring[:, 0])
         if crossing:  # antimeridian split (stac_utils.py:183-186)
-            parts = [(lon_min, 180.0), (-180.0, lon_max)]
+            parts = [(lon_min, 180.0, 0.0), (-180.0, lon_max, -360.0)]
         else:
-            parts = [(lon_min, lon_max)]
-        for p_lon_min, p_lon_max in parts:
-            if crossing or fp.get("ring") is None:
-                # per-part rectangle ring (reference ring vertex order)
-                part_ring = [
-                    [p_lon_min, lat_min], [p_lon_min, lat_max],
-                    [p_lon_max, lat_max], [p_lon_max, lat_min],
-                    [p_lon_min, lat_min],
-                ]
-            else:
-                part_ring = list(map(list, fp["ring"]))
-            ring_json = json.dumps(part_ring, separators=(",", ":"))
+            parts = [(lon_min, lon_max, 0.0)]
+        for p_lon_min, p_lon_max, shift in parts:
+            edges = None if ring is None else _edges(ring + [shift, 0.0])
             for cell in _cover_box(p_lon_min, lat_min, p_lon_max, lat_max, grid_deg):
                 rows.append(
                     {
@@ -79,44 +116,15 @@ def footprint_cover_pdf(footprints: pd.DataFrame, grid_deg: float = GRID_DEG) ->
                         "f_lat_min": lat_min,
                         "f_lon_max": p_lon_max,
                         "f_lat_max": lat_max,
-                        "ring_json": ring_json,
+                        "edges": edges,
                     }
                 )
-    return pd.DataFrame(
-        rows,
-        columns=["cell_grid", "collection_id", "f_lon_min", "f_lat_min",
-                 "f_lon_max", "f_lat_max", "ring_json"],
-    )
+    return pd.DataFrame(rows, columns=COVER_SCHEMA.fieldNames())
 
 
 def footprint_cover_df(spark: SparkSession, footprints: pd.DataFrame,
                        grid_deg: float = GRID_DEG) -> DataFrame:
-    schema = T.StructType(
-        [
-            T.StructField("cell_grid", T.LongType()),
-            T.StructField("collection_id", T.StringType()),
-            T.StructField("f_lon_min", T.DoubleType()),
-            T.StructField("f_lat_min", T.DoubleType()),
-            T.StructField("f_lon_max", T.DoubleType()),
-            T.StructField("f_lat_max", T.DoubleType()),
-            T.StructField("ring_json", T.StringType()),
-        ]
-    )
-    return spark.createDataFrame(footprint_cover_pdf(footprints, grid_deg), schema=schema)
-
-
-@pandas_udf(T.BooleanType())
-def pip_refine_udf(lon: pd.Series, lat: pd.Series, ring_json: pd.Series) -> pd.Series:
-    """Exact even-odd PIP refinement for general rings. Parses each distinct
-    ring once per Arrow batch, then tests all its points vectorized."""
-    out = np.zeros(len(lon), dtype=bool)
-    lons = lon.to_numpy(dtype=np.float64)
-    lats = lat.to_numpy(dtype=np.float64)
-    for rj, idx in ring_json.groupby(ring_json, dropna=True).groups.items():
-        ring = np.asarray(json.loads(rj), dtype=np.float64)
-        ii = np.asarray(idx)
-        out[ii] = points_in_ring(lons[ii], lats[ii], ring)
-    return pd.Series(out)
+    return spark.createDataFrame(footprint_cover_pdf(footprints, grid_deg), schema=COVER_SCHEMA)
 
 
 # multi-resolution join grids: big footprints cover few coarse cells, small
@@ -161,18 +169,7 @@ def multires_cover_df(spark: SparkSession, footprints: pd.DataFrame,
         # astype below returns an empty typed frame instead of KeyError
         cover = footprint_cover_pdf(footprints)
         cover["res"] = pd.Series([], dtype="int32")
-    schema = T.StructType(
-        [
-            T.StructField("cell_grid", T.LongType()),
-            T.StructField("collection_id", T.StringType()),
-            T.StructField("f_lon_min", T.DoubleType()),
-            T.StructField("f_lat_min", T.DoubleType()),
-            T.StructField("f_lon_max", T.DoubleType()),
-            T.StructField("f_lat_max", T.DoubleType()),
-            T.StructField("ring_json", T.StringType()),
-            T.StructField("res", T.IntegerType()),
-        ]
-    )
+    schema = T.StructType(COVER_SCHEMA.fields + [T.StructField("res", T.IntegerType())])
     cover["res"] = cover["res"].astype("int32")
     return spark.createDataFrame(cover, schema=schema)
 
@@ -181,7 +178,6 @@ def pip_join_multires(
     items: DataFrame,
     cover: DataFrame,
     levels: tuple = MULTI_RES_DEG,
-    exact: str = "rect",
 ) -> DataFrame:
     """Broadcast PIP join against a multi-resolution cover: the fact side
     computes one grid cell per level (``grid_cell_col`` at that level's
@@ -192,61 +188,63 @@ def pip_join_multires(
     for ri, deg in enumerate(levels):
         lvl_cover = cover.filter(F.col("res") == ri).drop("res")
         lvl_items = items.withColumn("cell_grid", grid_cell_col("lon", "lat", deg))
-        j = pip_join(lvl_items, lvl_cover, exact=exact)
+        j = pip_join(lvl_items, lvl_cover)
         out = j if out is None else out.unionByName(j)
     return out
+
+
+def _in_ring(lon: Column, lat: Column, edges: Column) -> Column:
+    """Even-odd ray cast of (lon, lat) against ``edges``, true when they are
+    null. Each edge's crossing is computed as ``functions.pip.
+    points_in_ring`` computes it, so the two agree bit for bit; the CASE
+    keeps a horizontal edge from dividing by zero under ANSI mode."""
+
+    def crosses(e: Column) -> Column:
+        straddles = (e["y1"] > lat) != (e["y2"] > lat)
+        x_cross = e["x1"] + (lat - e["y1"]) * (e["x2"] - e["x1"]) / (e["y2"] - e["y1"])
+        return F.when(straddles, lon < x_cross).otherwise(F.lit(False))
+
+    return edges.isNull() | F.aggregate(edges, F.lit(False), lambda acc, e: acc != crosses(e))
 
 
 def pip_join(
     items: DataFrame,
     cover: DataFrame,
-    exact: str = "rect",
     how: str = "inner",
+    *,
+    exact: str = "rect",
 ) -> DataFrame:
     """Broadcast PIP join: items (with lon/lat/cell_grid) × footprint cover.
 
-    ``exact='rect'`` refines with JVM between-predicates (correct for the
-    bbox-ring footprints this engine generates — same shapes the reference
-    produces, stac_utils.py:197-228). ``exact='pip'`` refines with the
-    general ray-casting UDF. ``exact='none'`` returns raw candidates.
+    One ``BroadcastHashJoin`` on ``cell_grid`` whose condition is the
+    refine: the closed-interval bbox test of the cover row, and the
+    even-odd ray cast over its ``edges`` when the footprint is not a box.
+    The output is the item columns plus the matched ``collection_id``.
 
     ``how='inner'`` (default): items in no footprint drop out, mirroring
     items not posted to any collection. ``how='left'``: every item row is
     preserved — null-geometry items and footprint-unmatched items carry a
     null collection_id (the reference tolerates geometry-less items,
-    collection_update.py:45-48). The rect/none left path folds refinement
-    into the join condition so it stays ONE BroadcastHashJoin(LeftOuter) —
-    zero fact-side shuffle. The pip left path needs a left_anti recovery
-    pass (a Python UDF can't sit in an outer-join condition); that
-    shuffles matched ids once and is documented as the slower variant.
+    collection_update.py:45-48). Either way it is one join and zero
+    fact-side shuffle.
+
+    ``exact`` selects nothing: the footprint's shape decides the refine.
+    It accepts only ``"rect"``, and stays only because the benchmark's
+    traced prefixes (``perfbench/run.py``) still pass it; any other value
+    raises ``ValueError``.
     """
-    if how == "left":
-        if exact == "pip":
-            matched = pip_join(items, cover, exact="pip", how="inner")
-            unmatched = items.join(
-                matched.select("id").distinct(), "id", "left_anti"
-            ).withColumn("collection_id", F.lit(None).cast("string"))
-            return matched.unionByName(unmatched)
-        it, cv = items.alias("it"), cover.alias("cv")
-        cond = F.col("it.cell_grid") == F.col("cv.cell_grid")
-        if exact == "rect":
-            cond = (
-                cond
-                & (F.col("it.lon") >= F.col("cv.f_lon_min"))
-                & (F.col("it.lon") <= F.col("cv.f_lon_max"))
-                & (F.col("it.lat") >= F.col("cv.f_lat_min"))
-                & (F.col("it.lat") <= F.col("cv.f_lat_max"))
-            )
-        j = it.join(F.broadcast(cv), cond, "left")
-        return j.select("it.*", F.col("cv.collection_id").alias("collection_id"))
-    j = items.join(F.broadcast(cover), "cell_grid")
-    if exact == "rect":
-        j = j.filter(
-            (F.col("lon") >= F.col("f_lon_min"))
-            & (F.col("lon") <= F.col("f_lon_max"))
-            & (F.col("lat") >= F.col("f_lat_min"))
-            & (F.col("lat") <= F.col("f_lat_max"))
-        )
-    elif exact == "pip":
-        j = j.filter(pip_refine_udf(F.col("lon"), F.col("lat"), F.col("ring_json")))
-    return j.drop("f_lon_min", "f_lat_min", "f_lon_max", "f_lat_max", "ring_json")
+    if exact != "rect":
+        raise ValueError(f"exact={exact!r}: the refine follows the footprint shape; "
+                         "only 'rect' is accepted")
+    it, cv = items.alias("it"), cover.alias("cv")
+    lon, lat = F.col("it.lon"), F.col("it.lat")
+    cond = (
+        (F.col("it.cell_grid") == F.col("cv.cell_grid"))
+        & (lon >= F.col("cv.f_lon_min"))
+        & (lon <= F.col("cv.f_lon_max"))
+        & (lat >= F.col("cv.f_lat_min"))
+        & (lat <= F.col("cv.f_lat_max"))
+        & _in_ring(lon, lat, F.col("cv.edges"))
+    )
+    j = it.join(F.broadcast(cv), cond, how)
+    return j.select("it.*", F.col("cv.collection_id").alias("collection_id"))

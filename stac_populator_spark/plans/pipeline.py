@@ -46,30 +46,24 @@ from ..sources.checkpoint import CheckpointedPipeline
 VALIDATED_STAGE = "validated"
 
 
-def finish_items(extracted: DataFrame, cover: DataFrame, exact: str = "rect",
-                 tile_z: int = 7, how: str = "left") -> DataFrame:
+def finish_items(extracted: DataFrame, cover: DataFrame) -> DataFrame:
     """extract_items output → STAC items with cells, collection match and
-    tile id (narrow + broadcast — no fact-side shuffle anywhere)."""
+    zoom-7 tile id (narrow + broadcast — no fact-side shuffle anywhere).
+
+    The footprint join keeps every row: null-geometry pages and
+    footprint-unmatched pages pass as items with a null collection
+    (reference tolerates null geometry, collection_update.py:45-48), so
+    items+errors always account for every input page.
+    """
     items = encode_cells(extracted)
-    if how == "inner":
-        items = items.filter(items.lon.isNotNull())
-    joined = pip_join(items, cover, exact=exact, how=how)
-    tiled = assign_items_to_tiles(joined, z=tile_z)
+    joined = pip_join(items, cover, how="left")
+    tiled = assign_items_to_tiles(joined, z=7)
     return stac_item_json(tiled)
 
 
-def build_items(pages: DataFrame, cover: DataFrame, exact: str = "rect",
-                tile_z: int = 7, how: str = "left") -> DataFrame:
-    """pages → STAC items with cells, collection match and tile id (the
-    narrow+broadcast portion — no fact-side shuffle anywhere).
-
-    ``how='left'`` (default): the full corpus flows through — null-geometry
-    pages and footprint-unmatched pages pass as valid items with a null
-    collection (reference tolerates null geometry, collection_update.py:
-    45-48), so items+errors always account for every input page.
-    ``how='inner'``: the round-1 behavior (only footprint-matched items).
-    """
-    return finish_items(extract_items(pages), cover, exact=exact, tile_z=tile_z, how=how)
+def build_items(pages: DataFrame, cover: DataFrame) -> DataFrame:
+    """pages → STAC items (``finish_items`` over ``extract_items``)."""
+    return finish_items(extract_items(pages), cover)
 
 
 def validated_extract(pages: DataFrame) -> DataFrame:
@@ -78,8 +72,7 @@ def validated_extract(pages: DataFrame) -> DataFrame:
     return items.withColumn("failure_reason", failure_reason(items))
 
 
-def split_validated(validated: DataFrame, cover: DataFrame,
-                    exact: str = "rect") -> tuple[DataFrame, DataFrame]:
+def split_validated(validated: DataFrame, cover: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(items, errors) from the validated extract.
 
     Items are the valid rows through ``finish_items``. Errors are the
@@ -89,8 +82,7 @@ def split_validated(validated: DataFrame, cover: DataFrame,
     invalid page is never joined.
     """
     reason = F.col("failure_reason")
-    items = finish_items(validated.filter(reason.isNull()).drop("failure_reason"),
-                         cover, exact=exact)
+    items = finish_items(validated.filter(reason.isNull()).drop("failure_reason"), cover)
     dead = validated.filter(reason.isNotNull())
     dead_cols = set(dead.columns)
     errors = dead.select(
@@ -112,7 +104,6 @@ def run_pipeline(
     pages: DataFrame,
     footprints_pdf: pd.DataFrame,
     checkpoint_root: str | None = None,
-    exact: str = "rect",
 ) -> dict:
     """Full run: items + collection extents + dead-letter routing.
 
@@ -136,7 +127,7 @@ def run_pipeline(
     else:
         validated = validated_extract(pages).persist()
         metrics = {}
-    items, errors = split_validated(validated, cover, exact=exact)
+    items, errors = split_validated(validated, cover)
     return {
         "items": items,
         "collections": matched_collections(items),

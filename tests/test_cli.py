@@ -112,3 +112,40 @@ def test_runlog_records_match_dead_letter_table(spark, tree):
     # item_loc/loader → here verb/pages/out)
     start = recs[0]
     assert start["verb"] == "run" and start["out"] == out
+
+
+def test_run_honours_a_triangle_footprint(spark, tmp_path):
+    # a footprint ring that is not its bbox: the triangle (0,0) (10,0)
+    # (0,10). (2,2) lies inside it; (8,8) lies inside its bbox but outside
+    # the triangle, so that page is an item of no collection
+    import re
+
+    import pandas as pd
+
+    from stac_populator_spark.datagen import pages_pdf
+
+    position = re.compile(rb'name="geo\.position" content="[^"]*"')
+    pages = pages_pdf(0, 40)
+    html = pages["html"].tolist()
+    rows = [k for k, h in enumerate(html) if position.search(h)][:2]
+    for k, (lat, lon) in zip(rows, [(2.0, 2.0), (8.0, 8.0)]):
+        html[k] = position.sub(f'name="geo.position" content="{lat};{lon}"'.encode(), html[k])
+    pages["html"] = html
+    spark.createDataFrame(pages).write.parquet(str(tmp_path / "pages"))
+    fps = pd.DataFrame({
+        "collection_id": ["tri"],
+        "bbox": [[0.0, 0.0, 10.0, 10.0]],
+        "ring": [[[0.0, 0.0], [10.0, 0.0], [0.0, 10.0], [0.0, 0.0]]],
+    })
+    spark.createDataFrame(fps).write.parquet(str(tmp_path / "fps"))
+    rc = main(["run", "--pages", str(tmp_path / "pages"), "--out", str(tmp_path / "out"),
+               "--footprints", str(tmp_path / "fps")])
+    assert rc == 0
+    items = spark.read.parquet(str(tmp_path / "out" / "items"))
+    inside, outside = (pages["url"][k] for k in rows)
+    got = {r["url"]: r["collection_id"] for r in items.select("url", "collection_id").collect()}
+    assert got[inside] == "tri"
+    assert got[outside] is None
+    tri = {(r["lon"], r["lat"]) for r in items.filter("collection_id = 'tri'").collect()}
+    assert (8.0, 8.0) not in tri
+    assert all(lon + lat <= 10.0 for lon, lat in tri)

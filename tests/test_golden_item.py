@@ -75,11 +75,11 @@ def test_golden_item(spark):
 
 
 def test_observed_counts(spark):
-    from stac_populator_spark.lineage import observed_counts
     from stac_populator_spark.operators.extract import extract_items
+    from stac_populator_spark.runlog import observed_counts
 
     items = extract_items(pages_df(spark, 300, partitions=2))
-    df, obs = observed_counts(items)
+    df, obs = observed_counts(items, rows=F.lit(True), null_geometry=F.col("lon").isNull())
     df.write.format("noop").mode("overwrite").save()
     got = obs.get
     assert got["rows"] == 300

@@ -12,7 +12,6 @@ from stac_populator_spark.functions.geometry import (
     item_id_from_url,
     linear_ring,
     make_bbox,
-    split_rings_at_antimeridian,
     to_geometry,
     wgs84_compliant,
 )
@@ -22,7 +21,7 @@ from stac_populator_spark.functions.hexgrid import (
     hex_kring,
     kring_offsets,
 )
-from stac_populator_spark.functions.pip import bbox_intersects, points_in_ring, points_in_rings
+from stac_populator_spark.functions.pip import points_in_ring
 from stac_populator_spark.functions.s2 import (
     s2_cell_center,
     s2_cell_id,
@@ -217,22 +216,6 @@ def test_pip_concave():
     lons = np.array([0.5, 2.0, 2.0, 0.5])
     lats = np.array([0.5, 0.5, 2.0, 3.5])
     assert points_in_ring(lons, lats, ring).tolist() == [True, True, False, True]
-
-
-def test_pip_antimeridian_split():
-    rings = split_rings_at_antimeridian(170.0, -10.0, -160.0, 10.0)
-    assert len(rings) == 2
-    lons = np.array([175.0, -170.0, 0.0])
-    lats = np.array([0.0, 0.0, 0.0])
-    assert points_in_rings(lons, lats, rings).tolist() == [True, True, False]
-
-
-def test_bbox_intersects():
-    out = bbox_intersects(
-        np.array([0.0, 0.0]), np.array([0.0, 0.0]), np.array([10.0, 1.0]), np.array([10.0, 1.0]),
-        np.array([5.0, 2.0]), np.array([5.0, 2.0]), np.array([15.0, 3.0]), np.array([15.0, 3.0]),
-    )
-    assert out.tolist() == [True, False]
 
 
 def test_s2_hilbert_adjacency_property():

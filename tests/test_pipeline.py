@@ -10,7 +10,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from stac_populator_spark.datagen import footprints_pdf, pages_df, pages_pdf
-from stac_populator_spark.operators.cells import encode_cells
+from stac_populator_spark.functions.pip import points_in_ring
+from stac_populator_spark.operators.cells import encode_cells, grid_cell_col
 from stac_populator_spark.operators.extract import extract_items
 from stac_populator_spark.operators.spatial_join import (
     footprint_cover_df,
@@ -65,26 +66,135 @@ def test_extraction_counts(items, pages):
 
 def test_pip_join_matches_bruteforce(spark, items, fps):
     cover = footprint_cover_df(spark, fps)
-    joined = pip_join(items.filter(F.col("lon").isNotNull()), cover, exact="rect")
+    joined = pip_join(items.filter(F.col("lon").isNotNull()), cover)
     got = {(r["id"], r["collection_id"]) for r in joined.select("id", "collection_id").collect()}
     expected = _brute_force_pip(items.select("id", "lon", "lat").toPandas(), fps)
     assert got == expected
     assert len(got) > 0
 
 
-def test_pip_join_pip_mode_matches_rect(spark, items, fps):
+def test_pip_join_exact_accepts_only_rect(spark, items, fps):
+    # the footprint's shape picks the refine; no value selects another one
     cover = footprint_cover_df(spark, fps)
-    geo = items.filter(F.col("lon").isNotNull())
-    rect = {(r["id"], r["collection_id"]) for r in pip_join(geo, cover, "rect").select("id", "collection_id").collect()}
-    ray = {(r["id"], r["collection_id"]) for r in pip_join(geo, cover, "pip").select("id", "collection_id").collect()}
-    assert rect == ray
+    for exact in ("pip", "none"):
+        with pytest.raises(ValueError):
+            pip_join(items, cover, exact=exact)
+
+
+def _pairs(joined) -> set:
+    return {(r["id"], r["collection_id"]) for r in joined.select("id", "collection_id").collect()}
+
+
+def test_general_ring_refine_matches_box_refine(spark, items, fps):
+    # the same boxes as general rings: a vertex inserted halfway up the west
+    # edge leaves the shape alone but makes the vertex set no longer the
+    # bbox corners, so those cover rows carry edges and are ray cast (the
+    # crossing ones per part, over unwrapped lons). Off the boundaries the
+    # half-open ray cast and the closed box test agree.
+    general = fps.copy()
+    general["ring"] = [
+        [r[0], [r[0][0], (r[0][1] + r[1][1]) / 2.0], *r[1:]] for r in fps["ring"]
+    ]
+    box_cover = footprint_cover_df(spark, fps)
+    ring_cover = footprint_cover_df(spark, general)
+    assert box_cover.filter(F.col("edges").isNotNull()).count() == 0
+    assert ring_cover.filter(F.col("edges").isNull()).count() == 0
+    bounds = np.array([list(b) for b in fps["bbox"]])
+    on_lon = F.col("lon").isin(*{float(v) for v in bounds[:, [0, 2]].ravel()})
+    on_lat = F.col("lat").isin(*{float(v) for v in bounds[:, [1, 3]].ravel()})
+    geo = items.filter(F.col("lon").isNotNull() & ~on_lon & ~on_lat)
+    box = _pairs(pip_join(geo, box_cover))
+    assert box == _pairs(pip_join(geo, ring_cover))
+    crossing = {c for c, b in zip(fps["collection_id"], fps["bbox"]) if b[0] > b[2]}
+    assert {c for _, c in box} & crossing
+
+
+# a concave ring: horizontal edges at y = 0 and y = 10, and a notch whose
+# two diagonal edges meet at (5, 2)
+NOTCHED = [[0.0, 0.0], [10.0, 0.0], [10.0, 10.0], [6.0, 10.0], [5.0, 2.0],
+           [4.0, 10.0], [0.0, 10.0], [0.0, 0.0]]
+
+
+def _notched_points() -> pd.DataFrame:
+    """Random points, every vertex, 21 points along each edge, and points at
+    and 1 ULP either side of y = 0, 2 and 10."""
+    rng = np.random.default_rng(11)
+    lon = [rng.uniform(-1.0, 11.0, 50_000)]
+    lat = [rng.uniform(-1.0, 11.0, 50_000)]
+    ring = np.array(NOTCHED)
+    lon.append(ring[:, 0])
+    lat.append(ring[:, 1])
+    t = np.linspace(0.0, 1.0, 21)
+    for (x1, y1), (x2, y2) in zip(ring[:-1], ring[1:]):
+        lon.append(x1 + t * (x2 - x1))
+        lat.append(y1 + t * (y2 - y1))
+    xs = np.linspace(-0.5, 10.5, 1_001)
+    for y in (0.0, 2.0, 10.0):
+        for yy in (np.nextafter(y, -np.inf), y, np.nextafter(y, np.inf)):
+            lon.append(xs)
+            lat.append(np.full(len(xs), yy))
+    lon, lat = np.concatenate(lon), np.concatenate(lat)
+    return pd.DataFrame({"id": np.arange(len(lon)), "lon": lon, "lat": lat})
+
+
+def test_ring_refine_is_bit_identical_to_points_in_ring(spark):
+    # the JVM ray cast against the numpy reference, with ANSI mode on (a
+    # horizontal edge must not divide by zero): the refine is the closed
+    # bbox test and the ray cast, so that is what the reference computes
+    fp = pd.DataFrame({"collection_id": ["notch"], "bbox": [[0.0, 0.0, 10.0, 10.0]],
+                       "ring": [NOTCHED]})
+    pts = _notched_points()
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        df = spark.createDataFrame(pts).withColumn("cell_grid", grid_cell_col("lon", "lat"))
+        got = pip_join(df, footprint_cover_df(spark, fp), how="left").toPandas()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+    assert len(got) == len(pts)  # one footprint: each point once
+    got = got.sort_values("id")["collection_id"].notna().to_numpy()
+    lon, lat = pts["lon"].to_numpy(), pts["lat"].to_numpy()
+    expected = (points_in_ring(lon, lat, NOTCHED)
+                & (lon >= 0.0) & (lon <= 10.0) & (lat >= 0.0) & (lat <= 10.0))
+    assert int((got != expected).sum()) == 0
+    assert 0 < expected.sum() < len(pts)
+
+
+def test_crossing_general_ring_matches_unwrapped_bruteforce(spark):
+    # a concave ring across the antimeridian whose notch vertex lies west of
+    # it: each cover part carries the unwrapped ring, shifted for the west
+    # part, so it matches the reference over unwrapped lons
+    ring = [[170.0, -10.0], [-170.0, -10.0], [-170.0, 10.0], [-178.0, 0.0],
+            [170.0, 10.0], [170.0, -10.0]]
+    fp = pd.DataFrame({"collection_id": ["x"], "bbox": [[170.0, -10.0, -170.0, 10.0]],
+                       "ring": [ring]})
+    rng = np.random.default_rng(12)
+    lon = np.concatenate([rng.uniform(160.0, 180.0, 10_000), rng.uniform(-180.0, -160.0, 10_000)])
+    lat = rng.uniform(-12.0, 12.0, len(lon))
+    pts = pd.DataFrame({"id": np.arange(len(lon)), "lon": lon, "lat": lat})
+    df = spark.createDataFrame(pts).withColumn("cell_grid", grid_cell_col("lon", "lat"))
+    got = {r["id"] for r in pip_join(df, footprint_cover_df(spark, fp)).select("id").collect()}
+    def unwrap(x):
+        x = np.asarray(x, dtype=np.float64)
+        return np.where(x < 170.0, x + 360.0, x)
+
+    lon_u = unwrap(lon)
+    ring_u = np.column_stack([unwrap([v[0] for v in ring]), [v[1] for v in ring]])
+    inside = (points_in_ring(lon_u, lat, ring_u)
+              & (lat >= -10.0) & (lat <= 10.0) & (lon_u >= 170.0) & (lon_u <= 190.0))
+    expected = set(np.flatnonzero(inside).tolist())
+    assert got == expected
+    # both parts match points, and the notch leaves some of the bbox out
+    assert (lon[inside] > 0).any() and (lon[inside] < 0).any()
+    in_bbox = (lat >= -10.0) & (lat <= 10.0) & (lon_u <= 190.0) & (lon_u >= 170.0)
+    assert (in_bbox & ~inside).any()
 
 
 def test_antimeridian_footprints_match(spark, items, fps):
     crossing = fps[[b[0] > b[2] for b in fps["bbox"]]]
     assert len(crossing) > 0
     cover = footprint_cover_df(spark, crossing)
-    joined = pip_join(items.filter(F.col("lon").isNotNull()), cover, exact="rect")
+    joined = pip_join(items.filter(F.col("lon").isNotNull()), cover)
     got = {(r["id"], r["collection_id"]) for r in joined.select("id", "collection_id").collect()}
     expected = _brute_force_pip(items.select("id", "lon", "lat").toPandas(), crossing)
     assert got == expected

@@ -6,6 +6,7 @@ results stay correct."""
 
 import contextlib
 import io
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -96,22 +97,40 @@ def test_minhash_signatures_zero_exchange(spark):
 
 
 def test_pip_join_left_stays_broadcast_no_fact_shuffle(spark, pages_path):
-    # the corpus-complete path: LeftOuter broadcast join with the rect
-    # refinement folded into the join condition — still zero fact-side
-    # exchange (only the broadcast of the cover table)
+    # the corpus-complete path: LeftOuter broadcast join with the refine
+    # folded into the join condition — still zero fact-side exchange (only
+    # the broadcast of the cover table), for box and general rings alike
+    import pandas as pd
+
     from stac_populator_spark.datagen import footprints_pdf
-    from stac_populator_spark.operators.cells import encode_cells
+    from stac_populator_spark.operators.cells import encode_cells, grid_cell_col
     from stac_populator_spark.operators.extract import extract_items
     from stac_populator_spark.operators.spatial_join import footprint_cover_df, pip_join
 
     pages = spark.read.parquet(pages_path)
     items = encode_cells(extract_items(pages))
     cover = footprint_cover_df(spark, footprints_pdf())
-    plan = plan_of(pip_join(items, cover, exact="rect", how="left"))
+    plan = plan_of(pip_join(items, cover, how="left"))
     assert "BroadcastHashJoin" in plan
     assert "LeftOuter" in plan
     assert "SortMergeJoin" not in plan
     assert " Exchange (" not in plan
+    # a general ring: the ray cast sits in the same join's condition, and
+    # nothing crosses into Python for it
+    triangle = pd.DataFrame({
+        "collection_id": ["tri"],
+        "bbox": [[0.0, 0.0, 10.0, 10.0]],
+        "ring": [[[0.0, 0.0], [10.0, 0.0], [0.0, 10.0], [0.0, 0.0]]],
+    })
+    ring_cover = footprint_cover_df(spark, triangle)
+    points = extract_items(pages).withColumn("cell_grid", grid_cell_col("lon", "lat"))
+    plan = plan_of(pip_join(points, ring_cover, how="left"))
+    assert len(re.findall(r"^\(\d+\) BroadcastHashJoin", plan, re.M)) == 1
+    assert "Join type: LeftOuter" in plan
+    assert "aggregate(edges" in plan
+    assert " Exchange (" not in plan
+    assert "SortMergeJoin" not in plan
+    assert "ArrowEvalPython" not in plan
 
 
 def test_lsh_bucket_cap_plan_bounded(spark):
@@ -246,8 +265,8 @@ def test_domain_budget_single_window_exchange(spark):
 
 def test_point_grid_cell_stays_in_the_jvm(spark):
     # the point→grid formula is a JVM expression (cells.grid_cell_col) and
-    # the nation footprints are boxes, refined with the JVM exact="rect"
-    # between-predicates: none of these queries crosses into Python
+    # the nation footprints are boxes, refined with the JVM bbox test in
+    # the join condition: none of these queries crosses into Python
     import __spark_entry__ as E
 
     def python_nodes(df) -> int:
