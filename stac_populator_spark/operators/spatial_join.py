@@ -7,7 +7,8 @@ Strategy (scale-first):
    Antimeridian-crossing footprints are pre-split into two parts (reference
    split rule stac_utils.py:230-251), so every cover entry's bbox is a
    simple lon-interval box. A cover row also carries its ring's ``edges``,
-   which are null when the ring is its bbox (or absent).
+   which are null when the ring is its bbox (or absent); a cover where
+   every row is a box has no ``edges`` column at all.
 2. **Broadcast** the (cell → footprint) cover table and equi-join items on
    ``cell_grid`` — no shuffle of the fact side at all; every partition
    probes the same hash table.
@@ -15,7 +16,8 @@ Strategy (scale-first):
    cover row decides: the closed-interval bbox test, and for a row with
    ``edges`` also the even-odd ray cast over them (``_in_ring``, the
    operation order of ``functions.pip.points_in_ring``). A box footprint
-   skips the ray cast; no row crosses into Python.
+   skips the ray cast, and a box-only cover leaves it out of the plan,
+   so that join stays in whole-stage codegen; no row crosses into Python.
 
 At 100 TB the only data movement is the broadcast of the tiny cover table;
 item rows never shuffle. Skewed cells (oceans/megacities) don't matter for
@@ -33,7 +35,8 @@ from pyspark.sql import types as T
 from .cells import GRID_DEG, grid_cell_col
 
 # one cover row: a grid cell of one footprint part, the part's bbox and
-# its ring edges (null for a box ring, so the refine is the bbox test)
+# its ring edges (null for a box ring, so the refine is the bbox test;
+# the DataFrame drops the column when every row is a box)
 COVER_SCHEMA = T.StructType(
     [
         T.StructField("cell_grid", T.LongType()),
@@ -122,9 +125,20 @@ def footprint_cover_pdf(footprints: pd.DataFrame, grid_deg: float = GRID_DEG) ->
     return pd.DataFrame(rows, columns=COVER_SCHEMA.fieldNames())
 
 
+def _cover_df(spark: SparkSession, cover: pd.DataFrame, schema: T.StructType) -> DataFrame:
+    """The cover rows as a DataFrame, without the ``edges`` column when no
+    row has edges: ``pip_join`` then refines with the bbox test alone and
+    its join stays in whole-stage codegen (the ray cast's ``aggregate``
+    is evaluated outside it)."""
+    if cover["edges"].isna().all():
+        cover = cover.drop(columns="edges")
+        schema = T.StructType([f for f in schema.fields if f.name != "edges"])
+    return spark.createDataFrame(cover, schema=schema)
+
+
 def footprint_cover_df(spark: SparkSession, footprints: pd.DataFrame,
                        grid_deg: float = GRID_DEG) -> DataFrame:
-    return spark.createDataFrame(footprint_cover_pdf(footprints, grid_deg), schema=COVER_SCHEMA)
+    return _cover_df(spark, footprint_cover_pdf(footprints, grid_deg), COVER_SCHEMA)
 
 
 # multi-resolution join grids: big footprints cover few coarse cells, small
@@ -171,7 +185,7 @@ def multires_cover_df(spark: SparkSession, footprints: pd.DataFrame,
         cover["res"] = pd.Series([], dtype="int32")
     schema = T.StructType(COVER_SCHEMA.fields + [T.StructField("res", T.IntegerType())])
     cover["res"] = cover["res"].astype("int32")
-    return spark.createDataFrame(cover, schema=schema)
+    return _cover_df(spark, cover, schema)
 
 
 def pip_join_multires(
@@ -219,6 +233,8 @@ def pip_join(
     One ``BroadcastHashJoin`` on ``cell_grid`` whose condition is the
     refine: the closed-interval bbox test of the cover row, and the
     even-odd ray cast over its ``edges`` when the footprint is not a box.
+    A cover without an ``edges`` column (every footprint a box) gets the
+    bbox test alone, which whole-stage codegen compiles with the join.
     The output is the item columns plus the matched ``collection_id``.
 
     ``how='inner'`` (default): items in no footprint drop out, mirroring
@@ -244,7 +260,8 @@ def pip_join(
         & (lon <= F.col("cv.f_lon_max"))
         & (lat >= F.col("cv.f_lat_min"))
         & (lat <= F.col("cv.f_lat_max"))
-        & _in_ring(lon, lat, F.col("cv.edges"))
     )
+    if "edges" in cover.columns:
+        cond = cond & _in_ring(lon, lat, F.col("cv.edges"))
     j = it.join(F.broadcast(cv), cond, how)
     return j.select("it.*", F.col("cv.collection_id").alias("collection_id"))

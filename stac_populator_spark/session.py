@@ -28,6 +28,16 @@ def get_spark(
       per-row Python.
     - shuffle partitions default to ~2x the local core count; on a real
       cluster this is overridden per-job based on input size.
+    - generated-class cache of 1,000 entries (Spark's default is 100):
+      a warm operation recompiles nothing. The conf is static, so it
+      applies only when this call creates the session; a reused session
+      keeps the value it was created with.
+    - no Python call-site capture (``spark.python.sql.dataFrameDebugging
+      .enabled`` false): DataFrame and Column calls make no extra py4j
+      round trips. JVM errors lose only the Python call sites in their
+      ``== DataFrame ==`` context; ``extra_conf={"spark.python.sql.
+      dataFrameDebugging.enabled": "true"}`` brings them back. PySpark
+      reads the conf once per process, at the first DataFrame call.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
@@ -97,6 +107,22 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        # The generated-class cache evicts the least recently used class.
+        # A warm pass of the benchmark's five `queries` uses 168 distinct
+        # classes in the same order every time, so at the default 100
+        # entries every pass recompiled about 170 of them (~1.7 s of
+        # Janino). Measured working sets: one `run` 30 classes, the
+        # largest single oracle query 127, the whole 79-query oracle sweep
+        # 911. 1,000 holds them all. It costs no metaspace: after five
+        # `queries` passes it read 170.3 MB at 100 entries and 164.6 MB at
+        # 1,000, since each recompile loads a new class.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
+        # Spark 4.1 captures the Python call site of every DataFrame and
+        # Column call: about five py4j round trips, a stack walk and a
+        # failing ipykernel import each. Off, a warm `queries` pass makes
+        # ~5,700 py4j round trips instead of ~12,300, and a `run` ~2,250
+        # instead of ~5,800.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     if iceberg_jar and iceberg_wh:
         builder = (

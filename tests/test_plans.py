@@ -133,6 +133,25 @@ def test_pip_join_left_stays_broadcast_no_fact_shuffle(spark, pages_path):
     assert "ArrowEvalPython" not in plan
 
 
+def test_box_cover_join_stays_in_whole_stage_codegen(spark, pages_path):
+    # every datagen footprint is a box, so the cover carries no edges and
+    # the join condition is the bbox test alone: the executed plan keeps
+    # the BroadcastHashJoin inside a *(n) codegen stage (the ray cast's
+    # aggregate would push it out of codegen)
+    from stac_populator_spark.datagen import footprints_pdf
+    from stac_populator_spark.operators.spatial_join import footprint_cover_df
+    from stac_populator_spark.plans.pipeline import build_items
+
+    cover = footprint_cover_df(spark, footprints_pdf())
+    items = build_items(spark.read.parquet(pages_path), cover)
+    items.collect()
+    aqe = items._jdf.queryExecution().executedPlan()
+    assert aqe.isFinalPlan()
+    plan = aqe.executedPlan().toString()
+    joins = re.findall(r"(\*\(\d+\) )?BroadcastHashJoin", plan)
+    assert joins and all(codegen for codegen in joins), plan
+
+
 def test_lsh_bucket_cap_plan_bounded(spark):
     # r4 shape: the hot-bucket cap is a slice inside ONE bucket-grain
     # groupBy (collect_list + member×rep expansion) — no window sort, no
