@@ -1,14 +1,31 @@
-"""Similarity search over embedding columns (array<float>).
+"""Similarity search over embedding columns (array<double>).
 
-- ``cosine_topk``: brute-force baseline — broadcast the (small) query set,
-  JVM ``zip_with``/``aggregate`` dot products, window top-k. Exact; cost
-  O(n·q) with no shuffle of the corpus (queries broadcast).
-- ``lsh_bucket`` + ``lsh_topk``: the scale path — random-hyperplane LSH
-  signatures (deterministic seeded planes), candidates share a signature
-  band; exact cosine re-rank inside buckets. Sub-linear probe cost at
-  10^12 rows; recall tested against the brute-force baseline.
-- ``cosine_near_duplicates``: embedding near-dup pairs above a cosine
-  threshold via the same LSH bucketing.
+All six top-k operators stream their rows once through one ``mapInArrow``
+top-k kernel (:func:`_scan`), scored either by the cosine fold (the
+"cosine kernel") or by a PQ lookup-table sum (the "ADC kernel"):
+
+- ``cosine_topk`` / ``ivf_topk``: exact cosine top-k; IVF adds a
+  per-query probe mask over each row's inverted list.
+- ``pq_topk`` / ``ivfpq_topk``: asymmetric-distance (ADC) shortlist, then
+  an exact cosine rerank of the shortlist in the JVM.
+- ``ivf_topk_partitioned`` / ``ivfpq_topk_partitioned``: the same two
+  scans over an ``ivf*_write_partitioned`` layout. The probe lists
+  become a partition filter, and each row's list (and PQ code) is read
+  from the stored columns instead of being recomputed.
+- ``ivf_assign`` / ``pq_encode`` / ``ivf*_write_partitioned``: one encode
+  kernel appends ``ivf_cluster`` and/or the PQ code column.
+- ``cosine_near_duplicates``: banded random-hyperplane LSH candidates,
+  exact cosine verify in the JVM.
+
+Every formula below is written once: the row → list assignment
+(:func:`_assign_np`), the query → probe lists (:func:`_probe_mask`), the
+row → PQ code (:func:`_pq_codes_np`), the query lookup tables
+(:func:`_pq_luts`), the cosine fold (:func:`_seq_dots`,
+:func:`_seq_norms`), the ADC gather-sum (in :func:`_adc_scores`), the
+per-batch top-k (in :func:`_scan`) and the final rank
+(:func:`_rank`). Queries are collected to the driver once per call
+(:func:`_queries_np`); they are dim-table-small by contract, like the
+footprint cover.
 """
 
 from __future__ import annotations
@@ -18,6 +35,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+# the vector column name inside the scan frames the kernels read
+_VEC = "c_vec"
 
 
 def dot_expr(a, b) -> F.Column:
@@ -35,31 +55,25 @@ def cosine_expr(a, b) -> F.Column:
 
 
 # ---------------------------------------------------------------------------
-# Batch scoring kernels (r6, guide §4.2): the former shape scored every
-# (corpus row × query) PAIR through either interpreted higher-order JVM
-# expressions (zip_with+aggregate cosine — ~10µs/pair) or a per-pair-row
-# pandas UDF (ADC lookup — one np.asarray per pair). Both are O(n·q) rows
-# of per-row overhead. These kernels stream the CORPUS ONCE through
-# mapInArrow and score all queries per Arrow batch with vectorized numpy,
-# emitting only per-batch top-k/shortlist candidates — the JVM↔Python
+# Batch scoring kernels. Scoring every (corpus row × query) PAIR costs one
+# interpreted higher-order JVM cosine (~10µs/pair) or one per-pair pandas
+# UDF row. Instead the corpus streams ONCE through mapInArrow, every query
+# is scored per Arrow batch with vectorized numpy, and only the per-batch
+# top-k (or top-shortlist) rows per query come back — the JVM↔Python
 # boundary carries n rows in and ≈ batches·q·k rows out.
 #
-# Bit-exactness contract (results must hash identically to the pair
-# formulation): dot products and norms accumulate with an explicit
-# per-dimension left-fold loop — acc = (((0 + x1·y1) + x2·y2) + …) — the
-# exact IEEE-double operation order of zip_with+aggregate; norms use the
-# same fold; cos = dot / (norm_q · norm_c) in the same order; per-batch
-# top-k uses the same (cos desc, id asc) total order as the window rank,
-# so the union of per-batch top-k provably contains the global top-k and
-# the final (unchanged) window reproduces identical rows. ADC scores
-# replicate the former kernel's exact numpy calls (same gather + same
-# .sum(axis=1) pairwise reduction on the same dtype/layout).
+# Bit-exactness contract: dot products and norms accumulate with an
+# explicit per-dimension left fold — acc = (((0 + x1·y1) + x2·y2) + …) —
+# the IEEE-double operation order of zip_with+aggregate (cosine_expr), and
+# cos = dot / (norm_q · norm_c). The per-batch top-k uses the final
+# window's (score desc, id asc) total order with NaN greatest, so the
+# union of per-batch top-k contains the global top-k and the window
+# reproduces the pair formulation's rows.
 # ---------------------------------------------------------------------------
 
 
-def _np_queries(queries: DataFrame, query_id_col: str, vec_col: str):
-    """Collect the (dim-table-small by contract) query set driver-side:
-    (ids int64, Q (q, d) float64) — same rule as _pq_query_luts."""
+def _queries_np(queries: DataFrame, query_id_col: str, vec_col: str):
+    """The one query collect of a call: (ids int64, Q (q, d) float64)."""
     qpdf = queries.select(F.col(query_id_col), F.col(vec_col)).toPandas()
     qids = qpdf[query_id_col].to_numpy().astype(np.int64, copy=False)
     if len(qpdf) == 0:
@@ -84,85 +98,190 @@ def _seq_norms(M: np.ndarray) -> np.ndarray:
     return np.sqrt(acc)
 
 
-def _batch_mat(batch, col: str) -> np.ndarray:
-    """Arrow list<floatXX> column → (n, d) float64 matrix."""
+def _assign_np(M: np.ndarray, cents: np.ndarray) -> np.ndarray:
+    """Row → IVF list: the centroid with the largest dot product, ties to
+    the larger index (array_max(struct(d, i)) semantics)."""
+    scores = M @ cents.T.copy()
+    return scores.shape[1] - 1 - np.argmax(scores[:, ::-1], axis=1)
+
+
+def _probe_mask(Q: np.ndarray, cents: np.ndarray, n_probe: int) -> np.ndarray:
+    """Query → probe lists: (q, k_centroids) bool, True on each query's
+    ``n_probe`` largest-dot centroids (stable order on ties)."""
+    mask = np.zeros((len(Q), cents.shape[0]), dtype=bool)
+    if len(Q):
+        order = np.argsort(-(Q @ cents.T.copy()), axis=1, kind="stable")[:, :n_probe]
+        np.put_along_axis(mask, order, True, axis=1)
+    return mask
+
+
+def _pq_codes_np(M: np.ndarray, codebooks: np.ndarray) -> np.ndarray:
+    """Row → PQ code: (n, m) int32 — row L2-normalized, then per subspace
+    the nearest codeword by squared distance (first minimum on ties)."""
+    m, ksub, dsub = codebooks.shape
+    M = M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
+    codes = np.empty((len(M), m), dtype=np.int32)
+    for j in range(m):
+        S = M[:, j * dsub : (j + 1) * dsub]
+        d2 = ((S[:, None, :] - codebooks[j][None, :, :]) ** 2).sum(axis=2)
+        codes[:, j] = np.argmin(d2, axis=1)
+    return codes
+
+
+def _pq_luts(Q: np.ndarray, codebooks: np.ndarray) -> np.ndarray:
+    """(q, m, ksub) asymmetric-distance lookup tables, one query at a
+    time: the unit query's subspace inner products with every codeword."""
+    m, ksub, dsub = codebooks.shape
+    luts = np.zeros((len(Q), m, ksub))
+    for t, qv in enumerate(Q):
+        qv = qv / max(np.linalg.norm(qv), 1e-12)
+        luts[t] = np.stack([qv[j * dsub : (j + 1) * dsub] @ codebooks[j].T for j in range(m)])
+    return luts
+
+
+def _batch_mat(batch, col: str, dtype=np.float64) -> np.ndarray:
+    """Arrow list<…> column → (n, width) matrix."""
     arr = batch.column(col)
-    flat = arr.flatten().to_numpy(zero_copy_only=False)
-    flat = np.asarray(flat, dtype=np.float64)
+    flat = np.asarray(arr.flatten().to_numpy(zero_copy_only=False), dtype=dtype)
     return flat.reshape(len(arr), -1)
 
 
-def _topk_into(out, t, ids, key, vals, k, extra=None):
-    """Append query t's top-k rows by (key desc, id asc) to the out lists.
-    ``key`` is the sort key (NaN→+inf to match Spark's NaN-greatest
-    ordering); ``vals`` the emitted score; ``extra`` optional extra col."""
-    order = np.lexsort((ids, -key))[:k]
-    out[0].append(np.full(len(order), t))
-    out[1].append(ids[order])
-    out[2].append(vals[order])
-    if extra is not None:
-        out[3].append(extra[order])
+def _row_clusters(batch, M, cents):
+    """Each row's IVF list: computed from ``cents``, else read from a
+    stored ``ivf_cluster`` column, else None (no IVF)."""
+    if cents is not None:
+        return _assign_np(M, cents)
+    if "ivf_cluster" in batch.schema.names:
+        return batch.column("ivf_cluster").to_numpy(zero_copy_only=False)
+    return None
 
 
-def _cosine_topk_kernel(qids: np.ndarray, Q: np.ndarray, k: int,
-                        id_col: str, vec_col: str,
-                        probe_mask: np.ndarray | None = None,
-                        cluster_centroids: np.ndarray | None = None):
-    """mapInArrow kernel: per batch, cosine of every (row, query) pair in
-    fold order → per-batch per-query top-k rows (query_id, id, cos).
+def _cosine_scores(Q: np.ndarray, cents):
+    """Batch scorer for the cosine kernel: (clusters, score(t, rows))."""
+    qn = _seq_norms(Q)
 
-    With ``probe_mask`` (q, n_clusters) and ``cluster_centroids``, each row
-    is first assigned to its nearest centroid (the exact _assign_udf
-    arithmetic: BLAS matmul + reversed argmax) and query t only sees rows
-    whose cluster is in its probe set — the IVF inverted-list join as a
-    mask instead of an exchange."""
+    def prepare(batch):
+        M = _batch_mat(batch, _VEC)
+        cos = _seq_dots(M, Q) / (qn[None, :] * _seq_norms(M)[:, None])
+        return _row_clusters(batch, M, cents), lambda t, rows: cos[rows, t]
+
+    return prepare
+
+
+def _adc_scores(luts: np.ndarray, codebooks: np.ndarray, cents):
+    """Batch scorer for the ADC kernel: (clusters, score(t, rows)). Codes
+    are read from a stored ``pq_code`` column when the frame carries one
+    (the vectors then never leave the scan), else encoded from the rows."""
+    marange = np.arange(codebooks.shape[0])[None, :]
+
+    def prepare(batch):
+        if "pq_code" in batch.schema.names:
+            M, codes = None, _batch_mat(batch, "pq_code", np.int32)
+        else:
+            M = _batch_mat(batch, _VEC)
+            codes = _pq_codes_np(M, codebooks)
+        return (_row_clusters(batch, M, cents),
+                lambda t, rows: luts[t][marange, codes[rows]].sum(axis=1))
+
+    return prepare
+
+
+def _rank(df: DataFrame, score: str, k: int, query_id_col: str, id_col: str) -> DataFrame:
+    """Each query's top k rows by (score desc, id asc): (query_id, id,
+    round(score, 6), rank)."""
+    w = Window.partitionBy(query_id_col).orderBy(F.col(score).desc(), F.col(id_col).asc())
+    return (
+        df.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(query_id_col, id_col, F.round(score, 6).alias(score), "rank")
+    )
+
+
+def _scan(rows: DataFrame, qids: np.ndarray, k: int, prepare, score: str,
+          query_id_col: str, id_col: str, probe_mask: np.ndarray | None = None) -> DataFrame:
+    """Stream ``rows`` once through the top-k mapInArrow kernel and rank
+    the candidates: the global top k per query.
+
+    Per batch, the kernel keeps each query's top k rows by (score desc,
+    id asc) among the rows its probe mask admits (all rows without IVF).
+    ``prepare(batch)`` gives (row clusters, score(t, rows))."""
     import pyarrow as pa
 
-    qn = _seq_norms(Q) if Q.size else np.zeros(0)
-    C = cluster_centroids.T.copy() if cluster_centroids is not None else None
+    names = [query_id_col, id_col, score]
 
     def run(batches):
         for batch in batches:
-            n = batch.num_rows
-            if n == 0 or len(qids) == 0:
+            if batch.num_rows == 0 or len(qids) == 0:
                 continue
             ids = np.asarray(batch.column(id_col).to_numpy(zero_copy_only=False),
                              dtype=np.int64)
-            M = _batch_mat(batch, vec_col)
-            if C is not None:
-                scores = M @ C
-                clusters = scores.shape[1] - 1 - np.argmax(scores[:, ::-1], axis=1)
-            cos = _seq_dots(M, Q) / (qn[None, :] * _seq_norms(M)[:, None])
-            key = np.where(np.isnan(cos), np.inf, cos)
-            out = ([], [], [])
+            clusters, scores = prepare(batch)
+            out_t, out_id, out_s = [], [], []
             for t in range(len(qids)):
-                if C is not None:
-                    valid = np.nonzero(probe_mask[t][clusters])[0]
-                    if len(valid) == 0:
+                sel = slice(None)
+                if probe_mask is not None:
+                    sel = np.nonzero(probe_mask[t][clusters])[0]
+                    if len(sel) == 0:
                         continue
-                    _topk_into(out, t, ids[valid], key[valid, t], cos[valid, t], k)
-                else:
-                    _topk_into(out, t, ids, key[:, t], cos[:, t], k)
-            if not out[0]:
+                s = scores(t, sel)
+                # NaN → +inf: Spark orders NaN greatest
+                key = np.where(np.isnan(s), np.inf, s)
+                order = np.lexsort((ids[sel], -key))[:k]
+                out_t.append(np.full(len(order), t))
+                out_id.append(ids[sel][order])
+                out_s.append(s[order])
+            if not out_t:
                 continue
             yield pa.RecordBatch.from_arrays(
                 [
-                    pa.array(qids[np.concatenate(out[0])], pa.int64()),
-                    pa.array(np.concatenate(out[1]), pa.int64()),
-                    pa.array(np.concatenate(out[2]), pa.float64()),
+                    pa.array(qids[np.concatenate(out_t)], pa.int64()),
+                    pa.array(np.concatenate(out_id), pa.int64()),
+                    pa.array(np.concatenate(out_s), pa.float64()),
                 ],
-                names=["query_id", "vec_id", "cos"],
+                names=names,
             )
 
-    return run
-
-
-def _topk_schema(query_id_col: str, id_col: str, score_col: str) -> T.StructType:
-    return T.StructType([
+    scored = rows.mapInArrow(run, schema=T.StructType([
         T.StructField(query_id_col, T.LongType()),
         T.StructField(id_col, T.LongType()),
-        T.StructField(score_col, T.DoubleType()),
-    ])
+        T.StructField(score, T.DoubleType()),
+    ]))
+    return _rank(scored, score, k, query_id_col, id_col)
+
+
+def _pq_rerank(rows: DataFrame, vectors: DataFrame, queries: DataFrame, qids, Q,
+               codebooks: np.ndarray, k: int, shortlist: int, id_col: str,
+               vec_col: str, query_id_col: str, probe_mask=None, cents=None) -> DataFrame:
+    """ADC shortlist over ``rows``, then the exact cosine rerank in the JVM
+    of the shortlisted ids' ``vectors`` (id, c_vec)."""
+    short = _scan(rows, qids, shortlist, _adc_scores(_pq_luts(Q, codebooks), codebooks, cents),
+                  "approx_ip", query_id_col, id_col, probe_mask).select(query_id_col, id_col)
+    cand = (
+        short.join(vectors, id_col)
+        .join(
+            F.broadcast(queries.select(query_id_col, F.col(vec_col).alias("q_vec"))),
+            query_id_col,
+        )
+        .withColumn("cos", cosine_expr(F.col("q_vec"), F.col(_VEC)))
+    )
+    return _rank(cand, "cos", k, query_id_col, id_col)
+
+
+def _corpus_rows(corpus: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """(id, c_vec) scan frame of an in-memory corpus, widened when
+    under-partitioned so the kernel runs at session width
+    (skew.ensure_parallelism)."""
+    from .skew import ensure_parallelism
+
+    return ensure_parallelism(corpus.select(F.col(id_col), F.col(vec_col).alias(_VEC)))
+
+
+def _probed(spark, corpus_path: str, probe_mask: np.ndarray) -> DataFrame:
+    """A ``*_write_partitioned`` layout filtered to the union of the probe
+    lists — an ``isin`` PARTITION filter, so unprobed cluster directories
+    are never opened."""
+    probes = [int(c) for c in np.flatnonzero(probe_mask.any(axis=0))]
+    return spark.read.parquet(corpus_path).filter(F.col("ivf_cluster").isin(probes))
 
 
 def cosine_topk(
@@ -174,58 +293,17 @@ def cosine_topk(
     query_id_col: str = "query_id",
 ) -> DataFrame:
     """Exact top-k by cosine. Returns (query_id, vec_id, cos, rank);
-    deterministic tie-break on id. One corpus pass through the batch
-    kernel (queries ride the task closure — dim-table-small by contract,
-    like the PQ lookup tables); the final window ranks only
-    batches·q·k candidate rows. The corpus (scan-stage) is widened when
-    under-partitioned so the kernel runs at session width
-    (skew.ensure_parallelism). Values are bit-identical to the former
-    pair-join formulation — see the kernel-contract note above."""
-    from .skew import ensure_parallelism
-
-    qids, Q = _np_queries(queries, query_id_col, vec_col)
-    c = ensure_parallelism(corpus.select(F.col(id_col), F.col(vec_col).alias("c_vec")))
-    scored = c.mapInArrow(
-        _cosine_topk_kernel(qids, Q, k, id_col, "c_vec"),
-        schema=_topk_schema("query_id", "vec_id", "cos"),
-    ).withColumnRenamed("query_id", query_id_col).withColumnRenamed("vec_id", id_col)
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cos").desc(), F.col(id_col).asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, F.round("cos", 6).alias("cos"), "rank")
-    )
+    deterministic tie-break on id. One corpus pass through the cosine
+    kernel (queries ride the task closure); the final window ranks only
+    batches·q·k candidate rows."""
+    qids, Q = _queries_np(queries, query_id_col, vec_col)
+    return _scan(_corpus_rows(corpus, id_col, vec_col), qids, k, _cosine_scores(Q, None),
+                 "cos", query_id_col, id_col)
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
     rng = np.random.default_rng(seed)
     return rng.standard_normal((n_planes, dim))
-
-
-def lsh_signature_udf(planes: np.ndarray):
-    """Random-hyperplane signature: bit i = sign(v · plane_i), assembled
-    into a long — one numpy matmul per Arrow batch (inlined literal
-    expression trees are codegen-compile-bound, see _assign_udf)."""
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
-    P = planes.T.copy()  # (dim, n_planes)
-    weights = (1 << np.arange(planes.shape[0], dtype=np.int64))
-
-    @pandas_udf(T.LongType())
-    def _udf(vec: pd.Series) -> pd.Series:
-        M = np.stack(vec.map(lambda v: np.asarray(v, dtype=np.float64)))
-        bits = (M @ P) > 0
-        return pd.Series((bits @ weights).astype(np.int64))
-
-    return _udf
-
-
-def lsh_bucket(df: DataFrame, vec_col: str = "embedding", dim: int = 64,
-               n_planes: int = 16, seed: int = 42) -> DataFrame:
-    return df.withColumn(
-        "lsh_sig", lsh_signature_udf(_hyperplanes(dim, n_planes, seed))(F.col(vec_col))
-    )
 
 
 def _centroids(dim: int, k_centroids: int, seed: int = 43) -> np.ndarray:
@@ -234,36 +312,51 @@ def _centroids(dim: int, k_centroids: int, seed: int = 43) -> np.ndarray:
     return c / np.linalg.norm(c, axis=1, keepdims=True)
 
 
-def _assign_udf(cents: np.ndarray, top_n: int = 1):
-    """Vectorized centroid assignment: one numpy matmul per Arrow batch
-    (an inlined-literal JVM expression tree of dim×k literals is
-    compile-bound — measured several seconds of codegen at k=16, d=64).
-    Ties broken toward the larger index (argmax on reversed order is
-    avoided by adding a tiny index-ordered epsilon — deterministic)."""
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
+def _train_sample(df: DataFrame, vec_col: str, id_col: str, sample_n: int) -> np.ndarray:
+    """The training sample of :func:`ivf_train` and :func:`pq_train`: the
+    first ``sample_n`` rows in xxhash64(id) order (reproducible retrains),
+    L2-normalized."""
+    sample = (
+        df.select(F.col(vec_col).alias("v"), F.xxhash64(F.col(id_col)).alias("h"))
+        .orderBy("h")
+        .limit(sample_n)
+        .toPandas()
+    )
+    X = np.stack(sample["v"].map(lambda v: np.asarray(v, dtype=np.float64)))
+    return X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
 
-    C = cents.T.copy()  # (dim, k)
 
-    if top_n == 1:
-        @pandas_udf(T.IntegerType())
-        def _udf(vec: pd.Series) -> pd.Series:
-            M = np.stack(vec.map(lambda v: np.asarray(v, dtype=np.float64)))
-            scores = M @ C
-            # match array_max(struct(d, i)) semantics: max d, tie → max i
-            best = scores.shape[1] - 1 - np.argmax(scores[:, ::-1], axis=1)
-            return pd.Series(best.astype(np.int32))
+def _encode(df: DataFrame, vec_col: str, centroids: np.ndarray | None = None,
+            codebooks: np.ndarray | None = None, code_col: str = "pq_code") -> DataFrame:
+    """One mapInArrow kernel that appends ``ivf_cluster`` (int, from
+    :func:`_assign_np`) and/or ``code_col`` (array<int>, from
+    :func:`_pq_codes_np`) to every row, replacing a column of the same
+    name in place as ``withColumn`` does. The whole row crosses into
+    Python (a scalar UDF would ship only the vector), so a narrow frame
+    encodes cheapest."""
+    import pyarrow as pa
 
-        return _udf
+    fields = {f.name: f for f in df.schema.fields}
+    if centroids is not None:
+        fields["ivf_cluster"] = T.StructField("ivf_cluster", T.IntegerType())
+    if codebooks is not None:
+        fields[code_col] = T.StructField(code_col, T.ArrayType(T.IntegerType()))
 
-    @pandas_udf(T.ArrayType(T.IntegerType()))
-    def _udf_top(vec: pd.Series) -> pd.Series:
-        M = np.stack(vec.map(lambda v: np.asarray(v, dtype=np.float64)))
-        scores = M @ C
-        order = np.argsort(-scores, axis=1, kind="stable")[:, :top_n]
-        return pd.Series([row.astype(np.int32).tolist() for row in order])
+    def run(batches):
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            cols = dict(zip(batch.schema.names, batch.columns))
+            M = _batch_mat(batch, vec_col)
+            if centroids is not None:
+                cols["ivf_cluster"] = pa.array(_assign_np(M, centroids).astype(np.int32))
+            if codebooks is not None:
+                codes = _pq_codes_np(M, codebooks)
+                offsets = np.arange(0, codes.size + 1, codes.shape[1], dtype=np.int32)
+                cols[code_col] = pa.ListArray.from_arrays(offsets, codes.ravel())
+            yield pa.RecordBatch.from_arrays(list(cols.values()), names=list(cols))
 
-    return _udf_top
+    return df.mapInArrow(run, schema=T.StructType(list(fields.values())))
 
 
 def ivf_train(
@@ -278,20 +371,12 @@ def ivf_train(
     """Train IVF centroids with spherical k-means on a deterministic corpus
     sample (VERDICT r1: seeded-random centroids skew list sizes at scale).
 
-    Sampling is hash-deterministic (xxhash64(id) order, first ``sample_n``)
-    so retrains are reproducible; the sample is tiny relative to the corpus
+    The sample (:func:`_train_sample`) is tiny relative to the corpus
     (k-means on ≤~100k × dim floats is driver-trivial) while list-size
     balance transfers because centroids follow the data density. k-means++
     seeding, cosine metric (vectors and centroids L2-normalized).
     """
-    sample = (
-        df.select(F.col(vec_col).alias("v"), F.xxhash64(F.col(id_col)).alias("h"))
-        .orderBy("h")
-        .limit(sample_n)
-        .toPandas()
-    )
-    X = np.stack(sample["v"].map(lambda v: np.asarray(v, dtype=np.float64)))
-    X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
+    X = _train_sample(df, vec_col, id_col, sample_n)
     rng = np.random.default_rng(seed)
 
     # k-means++ init on cosine distance
@@ -319,19 +404,17 @@ def ivf_train(
 def ivf_assign(df: DataFrame, vec_col: str = "embedding", dim: int = 64,
                k_centroids: int = 16, seed: int = 43,
                centroids: np.ndarray | None = None) -> DataFrame:
-    """IVF coarse quantization: assign each vector to its nearest (by dot
-    product) of k unit centroids — trained (:func:`ivf_train`) when given,
-    else seeded-random. At scale the corpus would be written
-    partitioned/bucketed by ``ivf_cluster`` so probes touch only matching
-    partitions (partition pruning on the cluster column). The (scan-stage)
+    """IVF coarse quantization: append ``ivf_cluster``, each vector's
+    nearest (by dot product) of k unit centroids — trained
+    (:func:`ivf_train`) when given, else seeded-random — through the
+    encode kernel. :func:`ivf_write_partitioned` lays the corpus out by
+    this column so probes touch only matching partitions. The (scan-stage)
     input is widened when under-partitioned so the assignment matmul and
     everything downstream of it run at session width."""
     from .skew import ensure_parallelism
 
     cents = centroids if centroids is not None else _centroids(dim, k_centroids, seed)
-    return ensure_parallelism(df).withColumn(
-        "ivf_cluster", _assign_udf(cents)(F.col(vec_col))
-    )
+    return _encode(ensure_parallelism(df), vec_col, centroids=cents)
 
 
 def ivf_topk(
@@ -348,44 +431,19 @@ def ivf_topk(
     centroids: np.ndarray | None = None,
 ) -> DataFrame:
     """IVF ANN: probe the query's n_probe nearest centroids' inverted
-    lists only, exact cosine re-rank inside them. Probe cost ≈
-    n_probe/k_centroids of brute force; recall tested vs cosine_topk.
-    Pass ``centroids=ivf_train(corpus)`` for data-trained lists (balanced
-    at scale); default stays the seeded-random baseline.
+    lists only, exact cosine inside them. Probe cost ≈ n_probe/k_centroids
+    of brute force; recall tested vs cosine_topk. Pass
+    ``centroids=ivf_train(corpus)`` for data-trained lists (balanced at
+    scale); default stays the seeded-random baseline.
 
-    r6 shape: the corpus streams ONCE through the batch kernel, which
-    assigns each row's list (the exact _assign_udf arithmetic) and scores
-    it against only the queries probing that list — the inverted-list
-    equi-join becomes an in-kernel mask, so no n·(n_probe/k) pair rows
-    materialize and no per-pair interpreted cosine runs. Query probe
-    lists replicate _assign_udf's top_n numpy call driver-side. Values
-    bit-identical (kernel contract above; candidate sets identical by the
-    same cluster-membership predicate)."""
-    from .skew import ensure_parallelism
-
+    The corpus streams once through the cosine kernel, which assigns each
+    row's list and scores it against only the queries probing that list —
+    the inverted-list equi-join as an in-kernel mask, so no pair rows
+    materialize."""
     cents = centroids if centroids is not None else _centroids(dim, k_centroids, seed)
-    qids, Q = _np_queries(queries, query_id_col, vec_col)
-    if len(qids):
-        scores = Q @ cents.T.copy()
-        order = np.argsort(-scores, axis=1, kind="stable")[:, :n_probe]
-        probe_mask = np.zeros((len(qids), cents.shape[0]), dtype=bool)
-        for t in range(len(qids)):
-            probe_mask[t][order[t]] = True
-    else:
-        probe_mask = np.zeros((0, cents.shape[0]), dtype=bool)
-
-    c = ensure_parallelism(corpus.select(F.col(id_col), F.col(vec_col).alias("c_vec")))
-    scored = c.mapInArrow(
-        _cosine_topk_kernel(qids, Q, k, id_col, "c_vec",
-                            probe_mask=probe_mask, cluster_centroids=cents),
-        schema=_topk_schema("query_id", "vec_id", "cos"),
-    ).withColumnRenamed("query_id", query_id_col).withColumnRenamed("vec_id", id_col)
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cos").desc(), F.col(id_col).asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, F.round("cos", 6).alias("cos"), "rank")
-    )
+    qids, Q = _queries_np(queries, query_id_col, vec_col)
+    return _scan(_corpus_rows(corpus, id_col, vec_col), qids, k, _cosine_scores(Q, cents),
+                 "cos", query_id_col, id_col, _probe_mask(Q, cents, n_probe))
 
 
 def ivf_write_partitioned(corpus: DataFrame, path: str, vec_col: str = "embedding",
@@ -394,8 +452,8 @@ def ivf_write_partitioned(corpus: DataFrame, path: str, vec_col: str = "embeddin
     """Materialize the corpus partitioned by ``ivf_cluster`` — the storage
     layout that turns IVF probing into PARTITION PRUNING: a probe query
     reads only its n_probe clusters' files, never the other k−n_probe
-    directories. This is the 10^12-row story: the inverted lists live in
-    the table layout, not in memory."""
+    directories. The inverted lists live in the table layout, not in
+    memory."""
     ivf_assign(corpus, vec_col, dim, k_centroids, seed, centroids=centroids).write.mode(
         "overwrite"
     ).partitionBy("ivf_cluster").parquet(path)
@@ -418,37 +476,22 @@ def ivf_topk_partitioned(
     """ivf_topk over an :func:`ivf_write_partitioned` layout: the union of
     the queries' probe lists becomes an ``isin`` partition filter, so the
     parquet scan prunes to ≤ n_probe·n_queries cluster directories
-    (PushedFilters/PartitionFilters pinned in tests). The probe-cluster
-    set is collected driver-side — queries are the broadcast-small side by
-    definition (same rule as the footprint cover)."""
+    (PartitionFilters pinned in tests). The probed rows then run through
+    the same cosine kernel as :func:`ivf_topk`, with each row's list read
+    from its stored ``ivf_cluster``."""
     cents = centroids if centroids is not None else _centroids(dim, k_centroids, seed)
-    q = queries.select(
-        F.col(query_id_col),
-        F.col(vec_col).alias("q_vec"),
-        F.explode(_assign_udf(cents, top_n=n_probe)(F.col(vec_col))).alias("ivf_cluster"),
+    qids, Q = _queries_np(queries, query_id_col, vec_col)
+    mask = _probe_mask(Q, cents, n_probe)
+    rows = _probed(spark, corpus_path, mask).select(
+        F.col(id_col), F.col(vec_col).alias(_VEC), "ivf_cluster"
     )
-    probes = sorted(r["ivf_cluster"] for r in q.select("ivf_cluster").distinct().collect())
-    c = (
-        spark.read.parquet(corpus_path)
-        .filter(F.col("ivf_cluster").isin(probes))
-        .select(F.col(id_col), F.col(vec_col).alias("c_vec"), "ivf_cluster")
-    )
-    cand = c.join(F.broadcast(q), "ivf_cluster").withColumn(
-        "cos", cosine_expr(F.col("q_vec"), F.col("c_vec"))
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cos").desc(), F.col(id_col).asc())
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, F.round("cos", 6).alias("cos"), "rank")
-    )
+    return _scan(rows, qids, k, _cosine_scores(Q, None), "cos", query_id_col, id_col, mask)
 
 
 def lsh_bands_udf(planes: np.ndarray, n_bands: int, bits_per_band: int):
     """All band signatures in one matmul per Arrow batch: planes is
     (n_bands·bits_per_band, dim); band b's signature packs bits
     [b·bits, (b+1)·bits) into a long."""
-    from pyspark.sql import types as T
     from pyspark.sql.functions import pandas_udf
 
     P = planes.T.copy()  # (dim, n_bands*bits)
@@ -544,14 +587,7 @@ def pq_train(
     reproducible; k-means++ init, L2 metric on unit-normalized vectors so
     summed subspace inner products approximate cosine)."""
     dsub = dim // m
-    sample = (
-        df.select(F.col(vec_col).alias("v"), F.xxhash64(F.col(id_col)).alias("h"))
-        .orderBy("h")
-        .limit(sample_n)
-        .toPandas()
-    )
-    X = np.stack(sample["v"].map(lambda v: np.asarray(v, dtype=np.float64)))
-    X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
+    X = _train_sample(df, vec_col, id_col, sample_n)
     rng = np.random.default_rng(seed)
     books = []
     # preallocated buffers (r6): the seeding loop ran 2,040 small
@@ -562,7 +598,7 @@ def pq_train(
     # out= buffers (np.subtract/np.multiply/np.sum/np.matmul produce
     # bit-identical values with or without out=), and the rng draw order
     # is untouched, so codebooks are bit-identical (asserted in
-    # tests/test_dedup_textstats.py::test_pq_train_deterministic).
+    # tests/test_similarity_pq.py::test_pq_train_deterministic_and_shapes).
     n = len(X)
     diff = np.empty((n, dsub))
     d2new = np.empty(n)
@@ -606,108 +642,11 @@ def pq_train(
     return np.stack(books)  # (m, ksub, dsub)
 
 
-def pq_encode_udf(codebooks: np.ndarray):
-    """Vector → array<int> of m subspace code indices (one numpy distance
-    matrix per Arrow batch per subspace; deterministic first-min ties)."""
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
-    m, ksub, dsub = codebooks.shape
-
-    @pandas_udf(T.ArrayType(T.IntegerType()))
-    def _udf(vec: pd.Series) -> pd.Series:
-        M = np.stack(vec.map(lambda v: np.asarray(v, dtype=np.float64)))
-        M = M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
-        codes = np.empty((len(M), m), dtype=np.int32)
-        for j in range(m):
-            S = M[:, j * dsub : (j + 1) * dsub]
-            d2 = ((S[:, None, :] - codebooks[j][None, :, :]) ** 2).sum(axis=2)
-            codes[:, j] = np.argmin(d2, axis=1)
-        return pd.Series([row.tolist() for row in codes])
-
-    return _udf
-
-
 def pq_encode(df: DataFrame, codebooks: np.ndarray, vec_col: str = "embedding",
               out_col: str = "pq_code") -> DataFrame:
-    return df.withColumn(out_col, pq_encode_udf(codebooks)(F.col(vec_col)))
-
-
-def _pq_codes_np(M: np.ndarray, codebooks: np.ndarray) -> np.ndarray:
-    """(n, m) int32 PQ codes — the exact pq_encode_udf arithmetic (row
-    normalization, per-subspace squared-distance matrix, first-min
-    argmin)."""
-    m, ksub, dsub = codebooks.shape
-    M = M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
-    codes = np.empty((len(M), m), dtype=np.int32)
-    for j in range(m):
-        S = M[:, j * dsub : (j + 1) * dsub]
-        d2 = ((S[:, None, :] - codebooks[j][None, :, :]) ** 2).sum(axis=2)
-        codes[:, j] = np.argmin(d2, axis=1)
-    return codes
-
-
-def _adc_shortlist_kernel(qids: np.ndarray, luts3: np.ndarray, shortlist: int,
-                          codebooks: np.ndarray, id_col: str, vec_col: str,
-                          probe_mask: np.ndarray | None = None,
-                          cluster_centroids: np.ndarray | None = None):
-    """mapInArrow kernel: per batch — PQ-encode the rows (exact
-    pq_encode_udf arithmetic), ADC-score every (row, query) pair with the
-    exact former lookup-table ops (same gather + same .sum(axis=1)), and
-    emit each query's per-batch top-``shortlist`` by (score desc, id asc).
-    Optional IVF probe mask exactly as in _cosine_topk_kernel."""
-    import pyarrow as pa
-
-    m = codebooks.shape[0]
-    marange = np.arange(m)[None, :]
-    C = cluster_centroids.T.copy() if cluster_centroids is not None else None
-
-    def run(batches):
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0 or len(qids) == 0:
-                continue
-            ids = np.asarray(batch.column(id_col).to_numpy(zero_copy_only=False),
-                             dtype=np.int64)
-            M = _batch_mat(batch, vec_col)
-            if C is not None:
-                ascore = M @ C
-                clusters = ascore.shape[1] - 1 - np.argmax(ascore[:, ::-1], axis=1)
-            codes = _pq_codes_np(M, codebooks)
-            out = ([], [], [])
-            for t in range(len(qids)):
-                if C is not None:
-                    valid = np.nonzero(probe_mask[t][clusters])[0]
-                    if len(valid) == 0:
-                        continue
-                    s = luts3[t][marange, codes[valid]].sum(axis=1)
-                    key = np.where(np.isnan(s), np.inf, s)
-                    _topk_into(out, t, ids[valid], key, s, shortlist)
-                else:
-                    s = luts3[t][marange, codes].sum(axis=1)
-                    key = np.where(np.isnan(s), np.inf, s)
-                    _topk_into(out, t, ids, key, s, shortlist)
-            if not out[0]:
-                continue
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(qids[np.concatenate(out[0])], pa.int64()),
-                    pa.array(np.concatenate(out[1]), pa.int64()),
-                    pa.array(np.concatenate(out[2]), pa.float64()),
-                ],
-                names=["query_id", "vec_id", "approx_ip"],
-            )
-
-    return run
-
-
-def _luts3(queries: DataFrame, codebooks: np.ndarray, query_id_col: str,
-           vec_col: str, qids: np.ndarray) -> np.ndarray:
-    """_pq_query_luts stacked into a (q, m, ksub) array in qids order."""
-    luts = _pq_query_luts(queries, codebooks, query_id_col, vec_col)
-    if not len(qids):
-        return np.zeros((0,) + codebooks.shape[:2])
-    return np.stack([luts[q] for q in qids])
+    """Append ``out_col``: each vector's array<int> of m subspace code
+    indices (:func:`_pq_codes_np`), through the encode kernel."""
+    return _encode(df, vec_col, codebooks=codebooks, code_col=out_col)
 
 
 def pq_topk(
@@ -721,50 +660,19 @@ def pq_topk(
     query_id_col: str = "query_id",
 ) -> DataFrame:
     """PQ ANN with exact rerank: (1) asymmetric-distance scan — each query
-    precomputes an (m × ksub) inner-product lookup table driver-side (the
-    query side is dim-table-small, like footprints); the corpus streams
-    once through the ADC kernel (at scale over a code-only table the scan
-    column-prunes the vectors away — see ivfpq_topk_partitioned); (2) the
-    kernel emits per-batch top-``shortlist`` per query, the window keeps
-    the global top-``shortlist``; (3) exact cosine rerank joins the
-    shortlist ids (a tiny set) back to their true vectors. Returns
-    (query_id, vec_id, cos, rank). Scores and shortlists are bit-identical
-    to the former per-pair UDF formulation (kernel contract note)."""
-    from .skew import ensure_parallelism
-
-    qids, _Q = _np_queries(queries, query_id_col, vec_col)
-    luts3 = _luts3(queries, codebooks, query_id_col, vec_col, qids)
-    enc = ensure_parallelism(corpus.select(F.col(id_col), F.col(vec_col).alias("c_vec")))
-    short = (
-        enc.mapInArrow(
-            _adc_shortlist_kernel(qids, luts3, shortlist, codebooks, id_col, "c_vec"),
-            schema=_topk_schema("query_id", "vec_id", "approx_ip"),
-        )
-        .withColumnRenamed("query_id", query_id_col)
-        .withColumnRenamed("vec_id", id_col)
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("approx_ip").desc(), F.col(id_col).asc()
-    )
-    short = (
-        short.withColumn("_r", F.row_number().over(w))
-        .filter(F.col("_r") <= shortlist)
-        .select(query_id_col, id_col)
-    )
-    # exact rerank on the shortlist only
-    cand = (
-        short.join(corpus.select(id_col, F.col(vec_col).alias("c_vec")), id_col)
-        .join(
-            F.broadcast(queries.select(query_id_col, F.col(vec_col).alias("q_vec"))),
-            query_id_col,
-        )
-        .withColumn("cos", cosine_expr(F.col("q_vec"), F.col("c_vec")))
-    )
-    w2 = Window.partitionBy(query_id_col).orderBy(F.col("cos").desc(), F.col(id_col).asc())
-    return (
-        cand.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, F.round("cos", 6).alias("cos"), "rank")
+    gets an (m × ksub) inner-product lookup table, built driver-side from
+    the one query collect; the corpus streams once through the ADC kernel
+    (over a code-only table the scan column-prunes the vectors away — see
+    ivfpq_topk_partitioned); (2) the kernel emits per-batch
+    top-``shortlist`` per query, the window keeps the global
+    top-``shortlist``; (3) exact cosine rerank joins the shortlist ids (a
+    tiny set) back to their true vectors. Returns (query_id, vec_id, cos,
+    rank)."""
+    qids, Q = _queries_np(queries, query_id_col, vec_col)
+    return _pq_rerank(
+        _corpus_rows(corpus, id_col, vec_col),
+        corpus.select(id_col, F.col(vec_col).alias(_VEC)),
+        queries, qids, Q, codebooks, k, shortlist, id_col, vec_col, query_id_col,
     )
 
 
@@ -788,89 +696,15 @@ def ivfpq_topk(
     touches only the per-query shortlist. At 10^12 rows the scan cost is
     (n_probe/k_centroids) × (code_bytes/vector_bytes) of brute force —
     two multiplicative reductions — while the recall gate stays the same
-    shape as :func:`pq_topk`'s.
+    shape as :func:`pq_topk`'s, whose body this is plus the probe mask.
     """
-    from .skew import ensure_parallelism
-
-    qids, Q = _np_queries(queries, query_id_col, vec_col)
-    luts3 = _luts3(queries, codebooks, query_id_col, vec_col, qids)
-    # query probe lists: the exact _assign_udf top_n numpy call, driver-side
-    if len(qids):
-        scores = Q @ centroids.T.copy()
-        order = np.argsort(-scores, axis=1, kind="stable")[:, :n_probe]
-        probe_mask = np.zeros((len(qids), centroids.shape[0]), dtype=bool)
-        for t in range(len(qids)):
-            probe_mask[t][order[t]] = True
-    else:
-        probe_mask = np.zeros((0, centroids.shape[0]), dtype=bool)
-
-    # one corpus pass: in-kernel IVF assignment + PQ encode + masked ADC
-    # scan (the inverted-list equi-join as a probe mask — no pair rows)
-    enc = ensure_parallelism(corpus.select(F.col(id_col), F.col(vec_col).alias("c_vec")))
-    short = (
-        enc.mapInArrow(
-            _adc_shortlist_kernel(qids, luts3, shortlist, codebooks, id_col, "c_vec",
-                                  probe_mask=probe_mask, cluster_centroids=centroids),
-            schema=_topk_schema("query_id", "vec_id", "approx_ip"),
-        )
-        .withColumnRenamed("query_id", query_id_col)
-        .withColumnRenamed("vec_id", id_col)
+    qids, Q = _queries_np(queries, query_id_col, vec_col)
+    return _pq_rerank(
+        _corpus_rows(corpus, id_col, vec_col),
+        corpus.select(id_col, F.col(vec_col).alias(_VEC)),
+        queries, qids, Q, codebooks, k, shortlist, id_col, vec_col, query_id_col,
+        probe_mask=_probe_mask(Q, centroids, n_probe), cents=centroids,
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("approx_ip").desc(), F.col(id_col).asc()
-    )
-    short = (
-        short.withColumn("_r", F.row_number().over(w))
-        .filter(F.col("_r") <= shortlist)
-        .select(query_id_col, id_col)
-    )
-    cand = (
-        short.join(corpus.select(id_col, F.col(vec_col).alias("c_vec")), id_col)
-        .join(
-            F.broadcast(queries.select(query_id_col, F.col(vec_col).alias("q_vec"))),
-            query_id_col,
-        )
-        .withColumn("cos", cosine_expr(F.col("q_vec"), F.col("c_vec")))
-    )
-    w2 = Window.partitionBy(query_id_col).orderBy(F.col("cos").desc(), F.col(id_col).asc())
-    return (
-        cand.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, F.round("cos", 6).alias("cos"), "rank")
-    )
-
-
-def _pq_query_luts(queries: DataFrame, codebooks: np.ndarray,
-                   query_id_col: str = "query_id", vec_col: str = "embedding"):
-    """Per-query (m × ksub) asymmetric-distance lookup tables, built
-    driver-side — the query set is dim-table-small by contract (same rule
-    as the footprint cover)."""
-    m, ksub, dsub = codebooks.shape
-    qpdf = queries.select(F.col(query_id_col), F.col(vec_col)).toPandas()
-    luts = {}
-    for _, row in qpdf.iterrows():
-        qv = np.asarray(row[vec_col], dtype=np.float64)
-        qv = qv / max(np.linalg.norm(qv), 1e-12)
-        luts[row[query_id_col]] = np.stack(
-            [qv[j * dsub : (j + 1) * dsub] @ codebooks[j].T for j in range(m)]
-        )
-    return luts
-
-
-def _approx_ip_udf(luts: dict, m: int):
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(T.DoubleType())
-    def approx_ip(code: pd.Series, qid: pd.Series) -> pd.Series:
-        codes = np.stack(code.map(np.asarray))
-        out = np.empty(len(codes))
-        for q, idx in qid.groupby(qid).groups.items():
-            ii = np.asarray(idx)
-            out[ii] = luts[q][np.arange(m)[None, :], codes[ii]].sum(axis=1)
-        return pd.Series(out)
-
-    return approx_ip
 
 
 def ivfpq_write_partitioned(corpus: DataFrame, path: str, codebooks: np.ndarray,
@@ -879,14 +713,20 @@ def ivfpq_write_partitioned(corpus: DataFrame, path: str, codebooks: np.ndarray,
     """Materialize the IVF-PQ index AS A TABLE LAYOUT: rows live in their
     IVF list's partition directory and carry both the PQ code (the scan
     payload) and the raw vector (the rerank payload, column-pruned out of
-    the code scan). This is the storage shape that makes 10^12-row ANN a
-    partition-pruned, code-width parquet scan."""
-    enc = pq_encode(
-        ivf_assign(corpus.select(id_col, vec_col), vec_col, centroids=centroids),
-        codebooks,
-        vec_col,
-    )
-    enc.write.mode("overwrite").partitionBy("ivf_cluster").parquet(path)
+    the code scan). One encode-kernel pass appends both columns."""
+    _ivfpq_layout(corpus, codebooks, centroids, id_col, vec_col).write.mode(
+        "overwrite"
+    ).partitionBy("ivf_cluster").parquet(path)
+
+
+def _ivfpq_layout(corpus: DataFrame, codebooks: np.ndarray, centroids: np.ndarray,
+                  id_col: str, vec_col: str) -> DataFrame:
+    """(id, vec, ivf_cluster, pq_code): the frame ivfpq_write_partitioned
+    writes, widened like :func:`ivf_assign`'s input."""
+    from .skew import ensure_parallelism
+
+    return _encode(ensure_parallelism(corpus.select(id_col, vec_col)), vec_col,
+                   centroids=centroids, codebooks=codebooks)
 
 
 def ivfpq_topk_partitioned(
@@ -905,52 +745,18 @@ def ivfpq_topk_partitioned(
     """:func:`ivfpq_topk` over an :func:`ivfpq_write_partitioned` layout —
     the fully-composed scale path: (1) the union of the queries' probe
     lists becomes an ``isin`` PARTITION filter, so only n_probe·n_queries
-    cluster directories are opened; (2) the ADC scan reads (id, pq_code)
-    only — the embedding column never leaves parquet (ReadSchema-pruned);
-    (3) the exact rerank re-reads the probed partitions for just the
-    shortlisted ids. Scan bytes ≈ brute-force × (n_probe/k_centroids) ×
-    (code_bytes/vector_bytes)."""
-    m = codebooks.shape[0]
-    q_probe = queries.select(
-        F.col(query_id_col),
-        F.explode(_assign_udf(centroids, top_n=n_probe)(F.col(vec_col))).alias(
-            "ivf_cluster"
-        ),
-    )
-    probes = sorted(r["ivf_cluster"] for r in q_probe.select("ivf_cluster").distinct().collect())
-    codes = (
-        spark.read.parquet(corpus_path)
-        .filter(F.col("ivf_cluster").isin(probes))
-        .select(id_col, "ivf_cluster", "pq_code")
-    )
-    luts = _pq_query_luts(queries, codebooks, query_id_col, vec_col)
-    scored = codes.join(F.broadcast(q_probe), "ivf_cluster").withColumn(
-        "approx_ip", _approx_ip_udf(luts, m)(F.col("pq_code"), F.col(query_id_col))
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("approx_ip").desc(), F.col(id_col).asc()
-    )
-    short = (
-        scored.withColumn("_r", F.row_number().over(w))
-        .filter(F.col("_r") <= shortlist)
-        .select(query_id_col, id_col)
-    )
-    rerank_side = (
-        spark.read.parquet(corpus_path)
-        .filter(F.col("ivf_cluster").isin(probes))
-        .select(id_col, F.col(vec_col).alias("c_vec"))
-    )
-    cand = (
-        short.join(rerank_side, id_col)
-        .join(
-            F.broadcast(queries.select(query_id_col, F.col(vec_col).alias("q_vec"))),
-            query_id_col,
-        )
-        .withColumn("cos", cosine_expr(F.col("q_vec"), F.col("c_vec")))
-    )
-    w2 = Window.partitionBy(query_id_col).orderBy(F.col("cos").desc(), F.col(id_col).asc())
-    return (
-        cand.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, F.round("cos", 6).alias("cos"), "rank")
+    cluster directories are opened; (2) the same ADC kernel scans
+    (id, ivf_cluster, pq_code) only, reading each row's list and code from
+    the stored columns — the embedding column never leaves parquet
+    (ReadSchema-pruned); (3) the exact rerank re-reads the probed
+    partitions for just the shortlisted ids. Scan bytes ≈ brute-force ×
+    (n_probe/k_centroids) × (code_bytes/vector_bytes)."""
+    qids, Q = _queries_np(queries, query_id_col, vec_col)
+    mask = _probe_mask(Q, centroids, n_probe)
+    layout = _probed(spark, corpus_path, mask)
+    return _pq_rerank(
+        layout.select(id_col, "ivf_cluster", "pq_code"),
+        layout.select(id_col, F.col(vec_col).alias(_VEC)),
+        queries, qids, Q, codebooks, k, shortlist, id_col, vec_col, query_id_col,
+        probe_mask=mask,
     )

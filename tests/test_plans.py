@@ -298,3 +298,40 @@ def test_point_grid_cell_stays_in_the_jvm(spark):
     assert python_nodes(E._doc_points_tiles(spark, sf)) == 0
     assert python_nodes(E._pip_points(spark, sf)) == 0
     assert python_nodes(E._stac_collections_items(spark, sf)) == 0
+
+
+def test_similarity_plans_cross_into_python_only_by_kernel(spark, tmp_path):
+    # the partitioned top-k paths and the encode paths run the mapInArrow
+    # kernels; no per-row pandas UDF is left in their plans
+    import numpy as np
+    import pandas as pd
+
+    from stac_populator_spark.operators import similarity as S
+
+    rng = np.random.default_rng(3)
+    corpus = spark.createDataFrame(pd.DataFrame({
+        "vec_id": range(64),
+        "embedding": [r.tolist() for r in rng.standard_normal((64, 16))],
+    }))
+    queries = corpus.filter(F.col("vec_id") < 4).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    books = S.pq_train(corpus, dim=16, m=4, ksub=8)
+    cents = S.ivf_train(corpus, k_centroids=4, sample_n=64)
+    ivf_path, ivfpq_path = str(tmp_path / "ivf"), str(tmp_path / "ivfpq")
+    S.ivf_write_partitioned(corpus, ivf_path, dim=16, k_centroids=4)
+    S.ivfpq_write_partitioned(corpus, ivfpq_path, books, cents)
+
+    frames = {
+        "ivf_topk_partitioned": S.ivf_topk_partitioned(
+            spark, ivf_path, queries, n_probe=2, dim=16, k_centroids=4),
+        "ivfpq_topk_partitioned": S.ivfpq_topk_partitioned(
+            spark, ivfpq_path, queries, books, cents, n_probe=2, shortlist=20),
+        "ivf_assign": S.ivf_assign(corpus, dim=16, k_centroids=4),
+        "pq_encode": S.pq_encode(corpus, books),
+        "ivfpq_write_partitioned": S._ivfpq_layout(corpus, books, cents, "vec_id", "embedding"),
+    }
+    for name, df in frames.items():
+        plan = plan_of(df)
+        assert "ArrowEvalPython" not in plan, name
+        assert "MapInArrow" in plan, name

@@ -96,3 +96,58 @@ def test_ivfpq_rerank_recall_on_clustered_data(spark):
     )
     assert len(ov) == queries.count()
     assert all(r["count"] >= 4 for r in ov)
+
+
+def test_ivfpq_full_probe_equals_pq_topk(emb):
+    # probing every list admits every row, so IVF-PQ runs the same ADC
+    # shortlist and rerank as PQ alone: equal row for row
+    from stac_populator_spark.operators.similarity import ivf_train, ivfpq_topk
+
+    books = pq_train(emb, m=8, ksub=16, sample_n=500)
+    cents = ivf_train(emb, k_centroids=8, sample_n=500)
+    queries = emb.filter(F.col("vec_id") % 80 == 0).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    full = ivfpq_topk(emb, queries, books, cents, k=5, n_probe=8, shortlist=40).collect()
+    flat = pq_topk(emb, queries, books, k=5, shortlist=40).collect()
+    assert len(flat) == 5 * queries.count()
+    assert sorted(tuple(r) for r in full) == sorted(tuple(r) for r in flat)
+
+
+def test_similarity_calls_collect_their_queries_once(spark, emb, tmp_path):
+    # building a top-k frame collects the (small) query set to the driver
+    # once; the PQ lookup tables and the IVF probe lists come from that
+    # one collect. The partitioned paths add only the parquet schema read.
+    from stac_populator_spark.operators.similarity import (
+        ivf_topk_partitioned,
+        ivf_train,
+        ivf_write_partitioned,
+        ivfpq_topk,
+        ivfpq_topk_partitioned,
+        ivfpq_write_partitioned,
+    )
+
+    sc = spark.sparkContext
+    books = pq_train(emb, m=8, ksub=16, sample_n=500)
+    cents = ivf_train(emb, k_centroids=8, sample_n=500)
+    queries = emb.filter(F.col("vec_id") % 80 == 0).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    ivf_path, ivfpq_path = str(tmp_path / "ivf"), str(tmp_path / "ivfpq")
+    ivf_write_partitioned(emb, ivf_path, k_centroids=8, centroids=cents)
+    ivfpq_write_partitioned(emb, ivfpq_path, books, cents)
+
+    def jobs(group, build) -> int:
+        sc.setJobGroup(group, group)
+        try:
+            build()
+        finally:
+            sc._jsc.clearJobGroup()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs("sim-pq", lambda: pq_topk(emb, queries, books, shortlist=40)) == 1
+    assert jobs("sim-ivfpq", lambda: ivfpq_topk(emb, queries, books, cents, shortlist=40)) == 1
+    assert jobs("sim-ivf-part", lambda: ivf_topk_partitioned(
+        spark, ivf_path, queries, k_centroids=8, centroids=cents)) <= 2
+    assert jobs("sim-ivfpq-part", lambda: ivfpq_topk_partitioned(
+        spark, ivfpq_path, queries, books, cents, shortlist=40)) <= 2
