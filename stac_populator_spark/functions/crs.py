@@ -13,9 +13,8 @@ pyproj expectations within its own comparison tolerance (pytest.approx
 rel 1e-6 — the residual is the sub-metre NAD83(CSRS)→WGS84 datum shift,
 which pyproj's hub path also treats as null for most transforms).
 
-``transform_to_wgs84`` is the registry seam, and since round 5 the
-pyproj side of it is WIRED (same optional-wheel pattern as the
-PIL/soundfile decode seam, operators/multimodal.py): the numpy registry
+``transform_to_wgs84`` is the registry seam, and the pyproj side of it
+is wired as an optional wheel (:func:`_try_pyproj`): the numpy registry
 stays primary (deterministic, wheel-free, tested), and a CRS the
 registry would dead-letter falls through to a pyproj transformer when a
 wheel is present — polar stereographic, Mercator variants, non-WGS84
@@ -1120,8 +1119,7 @@ _PYPROJ: object = "unresolved"
 
 
 def _try_pyproj():
-    """Optional-wheel seam (VERDICT r4 ask #4, mirrors _try_pil in
-    operators/multimodal.py): probe for a pyproj wheel once per Python
+    """Optional-wheel seam: probe for a pyproj wheel once per Python
     worker at first use. Present → any pyproj-resolvable CRS transforms
     instead of dead-lettering; absent → None, registry-only behavior."""
     global _PYPROJ

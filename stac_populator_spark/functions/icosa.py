@@ -207,11 +207,6 @@ def icosa_center(cell) -> tuple[np.ndarray, np.ndarray]:
     return _xyz_to_lonlat(g)
 
 
-_AXIAL_DIRS = np.array(
-    [(1, 0), (1, -1), (0, -1), (-1, 0), (-1, 1), (0, 1)], dtype=np.int64
-)
-
-
 def _kring_offsets(radius: int) -> np.ndarray:
     offs = []
     for dq in range(-radius, radius + 1):

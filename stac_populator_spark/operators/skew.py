@@ -16,8 +16,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+PARALLELISM_FACTOR = 2
 
-def ensure_parallelism(df: DataFrame, factor: int = 2) -> DataFrame:
+
+def ensure_parallelism(df: DataFrame) -> DataFrame:
     """Widen an under-partitioned input before CPU-heavy map-side work.
 
     Spark sizes file splits by BYTES (``maxPartitionBytes``), and a split
@@ -33,13 +35,16 @@ def ensure_parallelism(df: DataFrame, factor: int = 2) -> DataFrame:
     single row group; minhash/simhash showed the same signature —
     local[8] ≈ local[32] wall times at sf1.
 
-    Fix: round-robin repartition to ``defaultParallelism·factor`` when
-    (and only when) the input has fewer partitions — one narrow exchange
-    buys full stage width. At cluster scale a real table scan already
-    carries thousands of splits, so the guard makes this a structural
-    no-op; it exists for the many-cores-per-file regime, which is also
-    exactly the local bench shape. ``factor=2`` mirrors the session's
-    ``shuffle_partitions = cores·2`` sizing (mild skew headroom).
+    Fix: round-robin repartition to ``defaultParallelism·2`` when (and
+    only when) the input has fewer partitions — one narrow exchange buys
+    full stage width. At cluster scale a real table scan already carries
+    thousands of splits, so the guard makes this a structural no-op; it
+    exists for the many-cores-per-file regime, which is also exactly the
+    local bench shape. The factor is 2 (:data:`PARALLELISM_FACTOR`): two
+    tasks per core is mild skew headroom, since a core that finishes a
+    light task picks up another while a heavy one runs. It is not tied
+    to the shuffle width: ``get_spark`` defaults to one shuffle partition
+    per core.
 
     Probe (r6, VERDICT r5 ask #5): file-backed frames are probed with
     ``df.inputFiles()`` — a pure file-index lookup that CANNOT execute
@@ -55,7 +60,7 @@ def ensure_parallelism(df: DataFrame, factor: int = 2) -> DataFrame:
     carrying the 64-term SimHash/SWAR expression trees serializes
     multi-MB strings over py4j per call.)
     """
-    target = df.sparkSession.sparkContext.defaultParallelism * factor
+    target = df.sparkSession.sparkContext.defaultParallelism * PARALLELISM_FACTOR
     files = df.inputFiles()
     if files:
         if len(files) >= target:

@@ -26,8 +26,8 @@ def get_spark(
       north-rule's "AQE-tuned partitioning").
     - Arrow on: every pandas UDF moves data in columnar batches, never
       per-row Python.
-    - shuffle partitions default to ~2x the local core count; on a real
-      cluster this is overridden per-job based on input size.
+    - shuffle partitions default to the local core count (the N of
+      ``local[N]``); a caller can pass ``shuffle_partitions``.
     - generated-class cache of 1,000 entries (Spark's default is 100):
       a warm operation recompiles nothing. The conf is static, so it
       applies only when this call creates the session; a reused session

@@ -25,11 +25,10 @@ from ..plans.pipeline import build_items
 PAGES_DDL = "url STRING, warc_ts TIMESTAMP, html BINARY, text STRING, lang STRING"
 
 
-def read_pages_stream(spark: SparkSession, input_dir: str,
-                      max_files_per_trigger: int = 16) -> DataFrame:
+def read_pages_stream(spark: SparkSession, input_dir: str) -> DataFrame:
     return (
         spark.readStream.schema(PAGES_DDL)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 16)
         .parquet(input_dir)
     )
 

@@ -36,12 +36,6 @@ def test_noop_when_already_wide(spark):
     assert out is df
 
 
-def test_factor_controls_target(spark):
-    df = spark.range(0, 100, numPartitions=1)
-    out = ensure_parallelism(df, factor=3)
-    assert out.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism * 3
-
-
 def test_no_execution_on_derived_frame(spark, tmp_path):
     # r6: the probe must not execute upstream stages when handed a DERIVED
     # frame (join/agg over a file scan) — the former df.rdd probe forced

@@ -1,6 +1,7 @@
 """Ratchet on the ways the package crosses into Python row by row.
 
-Every scalar ``pandas_udf`` and every ``mapInPandas`` call in
+Every scalar ``pandas_udf``, every ``mapInPandas`` call and every
+grouped-map call (``applyInPandas``, ``applyInPandasWithState``) in
 ``stac_populator_spark/`` is listed below by ``module:function`` (the
 outermost function that holds it). The preferred crossing is a
 ``mapInArrow`` kernel, or no crossing at all where a JVM expression states
@@ -29,9 +30,12 @@ MAP_IN_PANDAS = Counter({
     "datagen:pages_df": 1,
     "operators.cmip6:cmip6_items": 1,
     "operators.cordex6:cordex6_items": 1,
-    "operators.multimodal:extract_features": 1,
     "operators.registry:apply_parsers": 1,
     "sources.cfattrs:cf_items": 1,
+})
+
+GROUPED_MAP = Counter({
+    "operators.registry:zscore_by_group": 1,
 })
 
 
@@ -44,8 +48,8 @@ def _name(node) -> str | None:
 
 
 def _sites():
-    """(scalar pandas_udf sites, mapInPandas sites) as Counters."""
-    scalar, map_in_pandas = Counter(), Counter()
+    """(scalar pandas_udf, mapInPandas, grouped-map) sites as Counters."""
+    scalar, map_in_pandas, grouped_map = Counter(), Counter(), Counter()
     for dirpath, _, files in os.walk(PACKAGE):
         for fname in sorted(files):
             if not fname.endswith(".py"):
@@ -66,18 +70,25 @@ def _sites():
                         scalar[f"{module}:{outer}"] += 1
                     elif _name(node.func) == "mapInPandas":
                         map_in_pandas[f"{module}:{outer}"] += 1
+                    elif _name(node.func) in ("applyInPandas", "applyInPandasWithState"):
+                        grouped_map[f"{module}:{outer}"] += 1
                 for child in ast.iter_child_nodes(node):
                     visit(child, outer)
 
             visit(tree, None)
-    return scalar, map_in_pandas
+    return scalar, map_in_pandas, grouped_map
 
 
 def test_scalar_pandas_udf_sites_are_the_listed_ones():
-    scalar, _ = _sites()
+    scalar, _, _ = _sites()
     assert scalar == SCALAR_PANDAS_UDF
 
 
 def test_map_in_pandas_sites_are_the_listed_ones():
-    _, map_in_pandas = _sites()
+    _, map_in_pandas, _ = _sites()
     assert map_in_pandas == MAP_IN_PANDAS
+
+
+def test_grouped_map_sites_are_the_listed_ones():
+    _, _, grouped_map = _sites()
+    assert grouped_map == GROUPED_MAP
