@@ -105,6 +105,16 @@ _DOC_TS_SQL = (
     "ELSE TIMESTAMP '2020-01-01 00:00:00' + (doc_id*977) * INTERVAL 1 SECOND END"
 )
 
+# great-circle km from point ``a`` to point ``b`` (two aliases with lon,
+# lat columns): the kNN oracle's distance
+_HAVERSINE_KM_SQL = (
+    "6371.0088 * 2.0 * asin(sqrt(least(greatest("
+    "pow(sin((radians(b.lat) - radians(a.lat)) / 2.0), 2) "
+    "+ cos(radians(a.lat)) * cos(radians(b.lat)) "
+    "* pow(sin((radians(b.lon) - radians(a.lon)) / 2.0), 2), "
+    "0.0), 1.0)))"
+)
+
 
 def _dec(col: str) -> F.Column:
     return F.col(col).cast("decimal(18,4)")
@@ -2585,11 +2595,7 @@ def oracle_sql() -> dict[str, str]:
             WITH pts AS (SELECT * FROM ({_DOC_POINTS_SQL}) WHERE doc_id % 7 = 0),
             pairs AS (
               SELECT a.doc_id AS doc_id, b.doc_id AS neighbor_id,
-                     6371.0088 * 2.0 * asin(sqrt(least(greatest(
-                       pow(sin((radians(b.lat) - radians(a.lat)) / 2.0), 2)
-                       + cos(radians(a.lat)) * cos(radians(b.lat))
-                         * pow(sin((radians(b.lon) - radians(a.lon)) / 2.0), 2),
-                     0.0), 1.0))) AS d_km
+                     {_HAVERSINE_KM_SQL} AS d_km
               FROM pts a JOIN pts b ON a.doc_id <> b.doc_id
             )
             SELECT doc_id, neighbor_id, rank, ROUND(d_km, 3) AS dist_km_r FROM (

@@ -9,37 +9,47 @@ self-join each item against items in its cell's k-ring neighborhood:
     join on cell  →  candidate pairs  →  haversine distance
     →  Window.partitionBy(left_id).orderBy(dist, right_id) rank ≤ k
 
-The join key (hex cell) is data-skewed (cities vs oceans) —
-`knn_join_salted` salts the hot cells and AQE skew-join handles the rest. The k-ring radius
-bounds the search; items whose true k-th neighbor lies beyond the ring get
-their ring-local top-k (documented approximation; `knn_bruteforce` is the
-exact oracle used by tests and small data).
+Every path ranks its candidate pairs with one top-k tail (:func:`_topk`),
+and the distance is a JVM expression (:func:`haversine_col`), so ranking
+never crosses into Python; only the hex cell and its k-ring are pandas
+UDFs. :func:`knn_join_exact` is what the engine runs: the ring pass plus
+a per-point distance proof, escalation and a broadcast brute-force
+remnant, exact at every scale. The join key (hex cell) is data-skewed
+(cities vs oceans) — :func:`knn_join_salted` salts the hot cells and AQE
+skew-join handles the rest. :func:`knn_join` alone is ring-local: items
+whose true k-th neighbor lies beyond the ring get their ring-local top-k.
+:func:`knn_bruteforce` is the exact O(n²) oracle of the tests.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
-from ..functions.geometry import haversine_km
-from ..functions.hexgrid import hex_cell, hex_kring
+from ..functions.hexgrid import edge_deg, hex_cell, hex_kring
+from .skew import ensure_parallelism
 
 
-@pandas_udf(T.DoubleType())
-def haversine_udf(lon1: pd.Series, lat1: pd.Series, lon2: pd.Series, lat2: pd.Series) -> pd.Series:
-    return pd.Series(haversine_km(lon1.to_numpy(), lat1.to_numpy(), lon2.to_numpy(), lat2.to_numpy()))
-
-
-def _kring_schema():
-    return T.ArrayType(T.LongType())
+def haversine_col(l_lon, l_lat, r_lon, r_lat) -> Column:
+    """Great-circle distance (km) as a JVM expression, in the operation
+    order of :func:`functions.geometry.haversine_km` (squares as ``s*s``).
+    The clip of ``a`` to [0, 1] keeps NaN, as ``np.clip`` does: Spark
+    orders NaN above every double, so a bare ``least(greatest(a, 0), 1)``
+    would read NaN as 1.0, an antipodal 20,015 km (and a null as 0.0)."""
+    lon1, lat1, lon2, lat2 = (F.radians(c) for c in (l_lon, l_lat, r_lon, r_lat))
+    s_lat = F.sin((lat2 - lat1) / 2.0)
+    s_lon = F.sin((lon2 - lon1) / 2.0)
+    a = s_lat * s_lat + F.cos(lat1) * F.cos(lat2) * (s_lon * s_lon)
+    a = F.when(F.isnan(a), a).when(a > 1.0, 1.0).when(a < 0.0, 0.0).otherwise(a)
+    return F.lit(6371.0088) * 2.0 * F.asin(F.sqrt(a))
 
 
 def kring_udf(radius: int):
-    @pandas_udf(_kring_schema())
+    @pandas_udf(T.ArrayType(T.LongType()))
     def _udf(cell: pd.Series) -> pd.Series:
         cells = cell.to_numpy(dtype=np.int64)
         rings = hex_kring(cells, radius)
@@ -85,7 +95,7 @@ def choose_res(n_points: int, k: int = 3, radius: int = 1,
     hex_area = 3.0 * (3.0 ** 0.5) / 2.0  # × e²
     best, best_err = 7, None
     for res in range(0, 16):
-        e = edge_deg_at(res)
+        e = edge_deg(res)
         cells = (lon_span * lat_span) / (hex_area * e * e)
         per_cell = max(n_points, 1) / cells
         err = abs(math.log(max(per_cell, 1e-12) / target_per_cell))
@@ -94,65 +104,88 @@ def choose_res(n_points: int, k: int = 3, radius: int = 1,
     return best
 
 
-def edge_deg_at(res: int) -> float:
-    from ..functions.hexgrid import edge_deg
+def _points(items: DataFrame, id_col: str) -> DataFrame:
+    """(id, lon, lat) of the items that have both coordinates."""
+    return items.filter(F.col("lon").isNotNull() & F.col("lat").isNotNull()).select(
+        F.col(id_col).alias("id"), "lon", "lat"
+    )
 
-    return edge_deg(res)
+
+def _side(pts: DataFrame, p: str, *extra) -> DataFrame:
+    """``pts`` as one side of a pair join: (p_id, p_lon, p_lat, *extra)."""
+    return pts.select(
+        F.col("id").alias(f"{p}_id"), F.col("lon").alias(f"{p}_lon"),
+        F.col("lat").alias(f"{p}_lat"), *extra,
+    )
 
 
-def _ghost_wrap(right: DataFrame, margin_deg: float) -> DataFrame:
-    """Antimeridian ghosts: points within ``margin_deg`` of ±180 get a
-    duplicate shifted by ∓360 on an unwrapped lon axis, so a ring search
-    near the seam sees its cross-seam neighbors as ordinary candidates
-    (haversine is 360°-periodic in Δλ, so distances stay exact). Ghost
-    volume is O(margin/360 · n) — vanishing at fine (dense) resolutions."""
-    ghosts = right.filter(F.abs(F.col("r_lon")) >= 180.0 - margin_deg).withColumn(
-        "r_lon_cell",
+def _topk(pairs: DataFrame, k: int, *extra) -> DataFrame:
+    """The one ranking every path shares: drop self-pairs, take the
+    distance, keep each left point's first k candidates by (dist_km,
+    r_id) → (id, neighbor_id, dist_km, rank, *extra)."""
+    w = Window.partitionBy("l_id").orderBy(F.col("dist_km").asc(), F.col("r_id").asc())
+    return (
+        pairs.filter(F.col("l_id") != F.col("r_id"))
+        .withColumn("dist_km", haversine_col("l_lon", "l_lat", "r_lon", "r_lat"))
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(F.col("l_id").alias("id"), F.col("r_id").alias("neighbor_id"),
+                "dist_km", "rank", *extra)
+    )
+
+
+def _brute_topk(left_pts: DataFrame, right_pts: DataFrame, k: int) -> DataFrame:
+    """Exact top-k of every left point over all right points; the (small)
+    left side is broadcast."""
+    return _topk(_side(right_pts, "r").join(F.broadcast(_side(left_pts, "l"))), k)
+
+
+def _ring_sides(left_pts: DataFrame, right_pts: DataFrame, res: int, radius: int):
+    """The two sides of the ring join and whether its pairs need dedup.
+
+    Left points explode to the cells of their k-ring; right points key by
+    home cell. Right points within ``margin`` of ±180 also get a ghost
+    shifted by ∓360 on an unwrapped lon axis, so a ring near the seam
+    sees its cross-seam neighbors as ordinary candidates (haversine is
+    360°-periodic in Δλ, so distances stay exact); ghost volume is
+    O(margin/360 · n). A ghost AND its original can both land in one ring
+    only when the ring's lon span approaches 360° − margin; below that
+    the dedup (a second pair-grain shuffle — the most expensive grain in
+    the query) is provably unnecessary and skipped."""
+    e = edge_deg(res)
+    cell = hex_cell_at_res(res)
+    left = _side(
+        left_pts, "l",
+        F.explode(kring_udf(radius)(cell(F.col("lon"), F.col("lat")))).alias("cell"),
+    )
+    margin = 2.0 * e * (radius + 1)
+    right = _side(right_pts, "r")
+    ghosts = right.filter(F.abs(F.col("r_lon")) >= 180.0 - margin).withColumn(
+        "lon_cell",
         F.when(F.col("r_lon") > 0, F.col("r_lon") - 360.0).otherwise(F.col("r_lon") + 360.0),
     )
-    return right.withColumn("r_lon_cell", F.col("r_lon")).unionByName(ghosts)
+    right = (
+        right.withColumn("lon_cell", F.col("r_lon")).unionByName(ghosts)
+        .select("r_id", "r_lon", "r_lat", cell(F.col("lon_cell"), F.col("r_lat")).alias("cell"))
+    )
+    ring_lon_span = 4.0 * e * (radius + 1)
+    return left, right, ring_lon_span + margin >= 360.0
+
+
+def _ring_pairs(left: DataFrame, right: DataFrame, on, dedup: bool) -> DataFrame:
+    """The ring join of :func:`_ring_sides`'s two sides on ``on``; with
+    ``dedup``, a ghost/original pair of one candidate collapses to one."""
+    pairs = left.join(right, on)
+    if dedup:
+        pairs = pairs.select("l_id", "l_lon", "l_lat", "r_id", "r_lon", "r_lat").distinct()
+    return pairs
 
 
 def _ring_topk(left_pts: DataFrame, right_pts: DataFrame, k: int, res: int,
                radius: int) -> DataFrame:
-    """Ring-bucketed top-k of ``right`` candidates per ``left`` point:
-    left ids explode their k-ring, right (with antimeridian ghosts) keys
-    by home cell; ghost+original duplicates collapse before ranking."""
-    e = edge_deg_at(res)
-    cell = hex_cell_at_res(res)
-    left = left_pts.select(
-        F.col("id").alias("l_id"),
-        F.col("lon").alias("l_lon"),
-        F.col("lat").alias("l_lat"),
-        F.explode(kring_udf(radius)(cell(F.col("lon"), F.col("lat")))).alias("cell"),
-    )
-    right = right_pts.select(
-        F.col("id").alias("r_id"),
-        F.col("lon").alias("r_lon"),
-        F.col("lat").alias("r_lat"),
-    )
-    margin = 2.0 * e * (radius + 1)
-    right = _ghost_wrap(right, margin_deg=margin).withColumn(
-        "cell", cell(F.col("r_lon_cell"), F.col("r_lat"))
-    )
-    pairs = left.join(right, "cell").filter(F.col("l_id") != F.col("r_id"))
-    # a ghost AND its original can both land in one ring only when the
-    # ring's lon span approaches 360° − margin; below that the dedup
-    # groupBy (a second pair-grain shuffle — the most expensive grain in
-    # the query) is provably unnecessary and skipped
-    ring_lon_span = 4.0 * e * (radius + 1)
-    if ring_lon_span + margin >= 360.0:
-        pairs = (
-            pairs.groupBy("l_id", "l_lon", "l_lat", "r_id", "r_lon", "r_lat")
-            .agg(F.lit(1).alias("_one"))
-        )
-    pairs = pairs.withColumn("dist_km", haversine_udf("l_lon", "l_lat", "r_lon", "r_lat"))
-    w = Window.partitionBy("l_id").orderBy(F.col("dist_km").asc(), F.col("r_id").asc())
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(F.col("l_id").alias("id"), F.col("r_id").alias("neighbor_id"), "dist_km", "rank")
-    )
+    """Ring-bucketed top-k of ``right`` candidates per ``left`` point."""
+    left, right, dedup = _ring_sides(left_pts, right_pts, res, radius)
+    return _topk(_ring_pairs(left, right, "cell", dedup), k)
 
 
 def _polar_rotate(lon_col: F.Column, lat_col: F.Column, south: bool):
@@ -176,34 +209,40 @@ def _polar_ring_topk(left_pts: DataFrame, right_pts: DataFrame, k: int, res: int
     the rotated (lon, lat); ``dist_km`` stays haversine on the ORIGINAL
     coordinates (bit-identical to every other path). No antimeridian
     ghosts needed — the cap maps to a disk around (0, 0), nowhere near
-    ±180° in rotated space."""
+    ±180° in rotated space. Carries the left point's rotated latitude as
+    ``_rlat`` for the proof."""
     cell = hex_cell_at_res(res)
-    rlon_l, rlat_l = _polar_rotate(F.col("lon"), F.col("lat"), south)
-    left = left_pts.select(
-        F.col("id").alias("l_id"),
-        F.col("lon").alias("l_lon"),
-        F.col("lat").alias("l_lat"),
-        rlat_l.alias("l_rlat"),
-        F.explode(kring_udf(radius)(cell(rlon_l, rlat_l))).alias("cell"),
+    rlon, rlat = _polar_rotate(F.col("lon"), F.col("lat"), south)
+    left = _side(
+        left_pts, "l", rlat.alias("l_rlat"),
+        F.explode(kring_udf(radius)(cell(rlon, rlat))).alias("cell"),
     )
-    rlon_r, rlat_r = _polar_rotate(F.col("lon"), F.col("lat"), south)
-    right = right_pts.select(
-        F.col("id").alias("r_id"),
-        F.col("lon").alias("r_lon"),
-        F.col("lat").alias("r_lat"),
-        cell(rlon_r, rlat_r).alias("cell"),
-    )
-    pairs = left.join(right, "cell").filter(F.col("l_id") != F.col("r_id"))
-    pairs = pairs.withColumn("dist_km", haversine_udf("l_lon", "l_lat", "r_lon", "r_lat"))
-    w = Window.partitionBy("l_id").orderBy(F.col("dist_km").asc(), F.col("r_id").asc())
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("l_id").alias("id"), F.col("r_id").alias("neighbor_id"),
-            "dist_km", "rank", F.col("l_rlat").alias("_rlat"),
-        )
-    )
+    right = _side(right_pts, "r", cell(rlon, rlat).alias("cell"))
+    return _topk(left.join(right, "cell"), k, F.col("l_rlat").alias("_rlat"))
+
+
+def _proof_deg(e: float, radius: int) -> float:
+    """Degrees that every point in a cell at hex-distance ≥ radius+1 lies
+    at least from a point of the centre cell, for hex edge ``e``: centre
+    spacing ≥ 1.5e per hex step, ±e circumradius each side."""
+    return max(1.5 * e * (radius + 1) - 2.0 * e, e * radius * (3.0 ** 0.5) / 2.0)
+
+
+def _beyond(floor: float, south: bool) -> Column:
+    """Latitude at or beyond ``floor`` degrees toward one pole."""
+    return F.col("lat") <= -floor if south else F.col("lat") >= floor
+
+
+def _cap_counts(floor: float, name: str) -> list:
+    """Aggregate columns ``<name>n`` and ``<name>s``: the points at or
+    beyond ``floor`` degrees toward the north and the south pole."""
+    return [F.sum(_beyond(floor, False).cast("int")).alias(name + "n"),
+            F.sum(_beyond(floor, True).cast("int")).alias(name + "s")]
+
+
+def _caps(row, name: str) -> dict:
+    """{south: count} from a row aggregated with :func:`_cap_counts`."""
+    return {False: row[name + "n"] or 0, True: row[name + "s"] or 0}
 
 
 def knn_join(
@@ -217,16 +256,10 @@ def knn_join(
     rank). ``res`` picks the bucket size (res 4 hexes ≈ 35 km edge on the
     compat grid); ``res=None`` adapts it to the measured point density
     (:func:`choose_res`) — the scale-safe default. Cross-antimeridian
-    neighbors are found via ghost candidates (:func:`_ghost_wrap`)."""
+    neighbors are found via ghost candidates (:func:`_ring_sides`)."""
     if res is None:
         res = choose_res(items.count(), k=k, radius=radius)
-    from .skew import ensure_parallelism
-
-    pts = ensure_parallelism(
-        items.filter(F.col("lon").isNotNull() & F.col("lat").isNotNull()).select(
-            F.col(id_col).alias("id"), "lon", "lat"
-        )
-    )
+    pts = ensure_parallelism(_points(items, id_col))
     return _ring_topk(pts, pts, k=k, res=res, radius=radius)
 
 
@@ -243,79 +276,32 @@ def knn_join_salted(
     candidate join splits *hot* cells into ``n_salts`` deterministic
     sub-keys so no single task owns a megacity cell.
 
-    Mechanics: hot cells (right-side rows > hot_threshold) are detected
-    with one cheap count; the right side gets
-    ``salt = pmod(xxhash64(id), n_salts)``, the left (k-ring-exploded)
-    side explodes each *hot* neighbor cell into all n_salts sub-keys and
-    keeps salt=0 for cold cells. Join key = (cell, salt). Salting is
-    hash-derived — rerun/retry identical (no rand()).
+    Mechanics: on the sides of :func:`_ring_sides`, hot cells (right-side
+    rows > hot_threshold, antimeridian ghosts included) are detected with
+    one cheap count; the right side gets ``salt = pmod(xxhash64(id),
+    n_salts)``, the left (k-ring-exploded) side explodes each *hot*
+    neighbor cell into all n_salts sub-keys and keeps salt=0 for cold
+    cells. Join key = (cell, salt). Salting is hash-derived — rerun/retry
+    identical (no rand()).
     """
-    pts = (
-        items.filter(F.col("lon").isNotNull() & F.col("lat").isNotNull())
-        .select(
-            F.col(id_col).alias("id"),
-            "lon",
-            "lat",
-            hex_cell_at_res(res)(F.col("lon"), F.col("lat")).alias("cell"),
-        )
+    pts = _points(items, id_col)
+    left, right, dedup = _ring_sides(pts, pts, res, radius)
+    hot = F.broadcast(
+        right.groupBy("cell").count().filter(F.col("count") > hot_threshold)
+        .select("cell", F.lit(True).alias("is_hot"))
     )
-    hot = pts.groupBy("cell").count().filter(F.col("count") > hot_threshold).select(
-        "cell", F.lit(True).alias("is_hot")
-    )
-
-    # antimeridian ghosts on the candidate side, exactly like
-    # :func:`_ring_topk` — without them cross-seam neighbors are silently
-    # missed and the documented identity with knn_join breaks (r4 review)
-    e = edge_deg_at(res)
-    margin = 2.0 * e * (radius + 1)
-    right = (
-        _ghost_wrap(
-            pts.select(
-                F.col("id").alias("r_id"),
-                F.col("lon").alias("r_lon"),
-                F.col("lat").alias("r_lat"),
-            ),
-            margin_deg=margin,
-        )
-        .withColumn("cell", hex_cell_at_res(res)(F.col("r_lon_cell"), F.col("r_lat")))
-        .join(F.broadcast(hot), "cell", "left")
-        .withColumn(
-            "salt",
-            F.when(F.col("is_hot"), F.pmod(F.xxhash64("r_id"), F.lit(n_salts))).otherwise(F.lit(0)),
-        )
-        .select("r_id", "r_lon", "r_lat", "cell", "salt")
-    )
-    left = (
-        pts.select(
-            F.col("id").alias("l_id"),
-            F.col("lon").alias("l_lon"),
-            F.col("lat").alias("l_lat"),
-            F.explode(kring_udf(radius)(F.col("cell"))).alias("cell"),
-        )
-        .join(F.broadcast(hot), "cell", "left")
-        .withColumn(
-            "salt",
-            F.explode(
-                F.when(F.col("is_hot"), F.sequence(F.lit(0), F.lit(n_salts - 1))).otherwise(
-                    F.array(F.lit(0))
-                )
-            ),
-        )
-    )
-    pairs = left.join(right, ["cell", "salt"]).filter(F.col("l_id") != F.col("r_id"))
-    # ghost+original dedup under the same condition as _ring_topk
-    ring_lon_span = 4.0 * e * (radius + 1)
-    if ring_lon_span + margin >= 360.0:
-        pairs = pairs.groupBy("l_id", "l_lon", "l_lat", "r_id", "r_lon", "r_lat").agg(
-            F.lit(1).alias("_one")
-        )
-    pairs = pairs.withColumn("dist_km", haversine_udf("l_lon", "l_lat", "r_lon", "r_lat"))
-    w = Window.partitionBy("l_id").orderBy(F.col("dist_km").asc(), F.col("r_id").asc())
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(F.col("l_id").alias("id"), F.col("r_id").alias("neighbor_id"), "dist_km", "rank")
-    )
+    right = right.join(hot, "cell", "left").withColumn(
+        "salt",
+        F.when(F.col("is_hot"), F.pmod(F.xxhash64("r_id"), F.lit(n_salts))).otherwise(F.lit(0)),
+    ).drop("is_hot")
+    left = left.join(hot, "cell", "left").withColumn(
+        "salt",
+        F.explode(
+            F.when(F.col("is_hot"), F.sequence(F.lit(0), F.lit(n_salts - 1)))
+            .otherwise(F.array(F.lit(0)))
+        ),
+    ).drop("is_hot")
+    return _topk(_ring_pairs(left, right, ["cell", "salt"], dedup), k)
 
 
 def knn_join_exact(
@@ -334,13 +320,12 @@ def knn_join_exact(
     Guarantee math (equirectangular hex grid, edge e degrees): any point
     in a cell at hex-distance ≥ radius+1 from p's cell lies at least
     ``D_deg = max(1.5·e·(radius+1) − 2e, e·radius·√3/2)`` degrees from p
-    (center spacing ≥ 1.5e per hex step, ±e circumradius each side).
-    A neighbor at d km can be at most ``d / (111.0·cos(|lat|+D_deg))``
-    degrees away (111.0 is a STRICT lower bound of the 111.195 km/deg
-    haversine meridian scale — an upper bound here would mark points
-    proven whose true k-th neighbor hides just outside the ring), so a
-    point is *proven complete* when it has ≥ k ring candidates and its
-    k-th distance satisfies that bound.
+    (:func:`_proof_deg`). A neighbor at d km can be at most
+    ``d / (111.0·cos(|lat|+D_deg))`` degrees away (111.0 is a STRICT
+    lower bound of the 111.195 km/deg haversine meridian scale — an
+    upper bound here would mark points proven whose true k-th neighbor
+    hides just outside the ring), so a point is *proven complete* when it
+    has ≥ k ring candidates and its k-th distance satisfies that bound.
 
     Scale shape: a single fixed-radius pass leaves a density-independent
     fraction unproven (high-latitude points pay a worst-case cos() factor),
@@ -349,54 +334,40 @@ def knn_join_exact(
     radius while each point's k-th distance is fixed, so survivors halve
     away geometrically; after ``max_escalations`` only pole-adjacent points
     (where the lon metric degenerates; the antimeridian seam is handled
-    exactly by ghost candidates in :func:`_ring_topk`) and true isolates
+    exactly by ghost candidates in :func:`_ring_sides`) and true isolates
     remain for the broadcast brute-force pass — a vanishing set.
     """
-    from ..functions.hexgrid import edge_deg
-
     max_escalations = 4
     # brute_budget: pair budget for the broadcast brute-force remnant —
-    # ~2e7 haversine lanes is ~1-2s of vectorized Arrow work on 32 cores;
-    # below it, another ring (or polar) round costs more than it saves (an
-    # optimizer-style cost-model choice; the answer is exact on every path)
+    # below it, another ring (or polar) round costs more in jobs and
+    # shuffles than the remnant's pairs cost in JVM distance arithmetic
+    # (an optimizer-style cost-model choice; the answer is exact on every
+    # path)
 
     polar_floor = 80.0
     band_margin = 5.0
     band_floor = polar_floor - band_margin
-    pts = items.filter(F.col("lon").isNotNull() & F.col("lat").isNotNull()).select(
-        F.col(id_col).alias("id"), "lon", "lat"
-    )
     # widen an under-partitioned source (single-row-group parquet → one
     # scan split) BEFORE the ring join: the join broadcasts the candidate
     # side, so the streamed side's scan partitioning is the stage width
     # for the explode + map-side WindowGroupLimit sort — measured on the
     # sf10 probe as a single 27-min spill-looping task (r5)
-    from .skew import ensure_parallelism
-
-    pts = ensure_parallelism(pts)
+    pts = ensure_parallelism(_points(items, id_col))
     # one job for the total AND the polar band populations at BOTH
     # escalation widths (the polar pass must not add count() round-trips
     # of its own — that cost 3× on the sf0.1 bench when it shipped as
-    # separate jobs)
+    # separate jobs), and the polar-cap populations too (r6): when the
+    # escalation loop never reassigns `remaining` (the brute-cheap
+    # small-scale path), the polar round reads them from here
     band_floor2 = polar_floor - 2.0 * band_margin
     _tot = pts.agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum((F.col("lat") >= band_floor).cast("int")).alias("bn"),
-        F.sum((F.col("lat") <= -band_floor).cast("int")).alias("bs"),
-        F.sum((F.col("lat") >= band_floor2).cast("int")).alias("bn2"),
-        F.sum((F.col("lat") <= -band_floor2).cast("int")).alias("bs2"),
-        # polar-cap populations too (r6): when the escalation loop never
-        # reassigns `remaining` (the brute-cheap small-scale path), the
-        # polar round's first cap-population aggregate would re-scan pts —
-        # fold it into this job and skip that round-trip below
-        F.sum((F.col("lat") >= polar_floor).cast("int")).alias("cn"),
-        F.sum((F.col("lat") <= -polar_floor).cast("int")).alias("cs"),
+        *_cap_counts(band_floor, "b"),
+        *_cap_counts(band_floor2, "b2"),
+        *_cap_counts(polar_floor, "c"),
     ).first()
     n_total = _tot["n"]
-    n_band_by_floor = {
-        band_floor: {False: _tot["bn"] or 0, True: _tot["bs"] or 0},
-        band_floor2: {False: _tot["bn2"] or 0, True: _tot["bs2"] or 0},
-    }
+    n_band_by_floor = {band_floor: _caps(_tot, "b"), band_floor2: _caps(_tot, "b2")}
     if res is None:
         res = choose_res(n_total, k=k, radius=radius)
 
@@ -419,9 +390,7 @@ def knn_join_exact(
             eager=False
         )
         e = edge_deg(res)
-        d_deg_safe = max(
-            1.5 * e * (radius_i + 1) - 2.0 * e, e * radius_i * (3.0 ** 0.5) / 2.0
-        )
+        d_deg_safe = _proof_deg(e, radius_i)
         per_point = ring.groupBy("id").agg(
             F.count(F.lit(1)).alias("n_found"), F.max("dist_km").alias("kth_km")
         )
@@ -444,13 +413,9 @@ def knn_join_exact(
         ).localCheckpoint(eager=False)
         done_parts.append(ring.join(unsat.select("id"), "id", "left_anti"))
         remaining = unsat
-        _u = unsat.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum((F.col("lat") >= polar_floor).cast("int")).alias("cn"),
-            F.sum((F.col("lat") <= -polar_floor).cast("int")).alias("cs"),
-        ).first()
+        _u = unsat.agg(F.count(F.lit(1)).alias("n"), *_cap_counts(polar_floor, "c")).first()
         cnt = _u["n"]
-        rem_caps = {False: _u["cn"] or 0, True: _u["cs"] or 0}
+        rem_caps = _caps(_u, "c")
         if cnt == 0:
             break
         if cnt * n_total <= brute_budget:
@@ -494,13 +459,9 @@ def knn_join_exact(
         if esc == 0 and rem_caps is not None:
             n_cap = rem_caps
         elif remaining is pts:
-            n_cap = {False: _tot["cn"] or 0, True: _tot["cs"] or 0}
+            n_cap = _caps(_tot, "c")
         else:
-            _rem = remaining.agg(
-                F.sum((F.col("lat") >= polar_floor).cast("int")).alias("cn"),
-                F.sum((F.col("lat") <= -polar_floor).cast("int")).alias("cs"),
-            ).first()
-            n_cap = {False: _rem["cn"] or 0, True: _rem["cs"] or 0}
+            n_cap = _caps(remaining.agg(*_cap_counts(polar_floor, "c")).first(), "c")
         engaged = False
         for south in (False, True):
             # same cost model as the remnant: when brute-covering this cap
@@ -513,23 +474,13 @@ def knn_join_exact(
             engaged = True
             if esc == 0:
                 stats["polar_cap"] += n_cap[south]
-            cap_pred = (
-                (F.col("lat") <= -polar_floor) if south else (F.col("lat") >= polar_floor)
-            )
-            cap = remaining.filter(cap_pred)
-            band_pred = (
-                (F.col("lat") <= -bf_i) if south else (F.col("lat") >= bf_i)
-            )
-            band = pts.filter(band_pred)
+            cap = remaining.filter(_beyond(polar_floor, south))
+            band = pts.filter(_beyond(bf_i, south))
             span = 2.0 * (90.0 - bf_i)
             res_p = choose_res(n_band_by_floor[bf_i][south], k=k, radius=radius_p,
                                lon_span=span, lat_span=span)
             ring = _polar_ring_topk(cap, band, k=k, res=res_p, radius=radius_p, south=south)
-            e_p = edge_deg_at(res_p)
-            d_deg_safe = max(
-                1.5 * e_p * (radius_p + 1) - 2.0 * e_p,
-                e_p * radius_p * (3.0 ** 0.5) / 2.0,
-            )
+            d_deg_safe = _proof_deg(edge_deg(res_p), radius_p)
             per_point = ring.groupBy("id").agg(
                 F.count(F.lit(1)).alias("n_found"),
                 F.max("dist_km").alias("kth_km"),
@@ -556,25 +507,7 @@ def knn_join_exact(
         if not engaged:
             break
 
-    # brute-force remnant: broadcast the (tiny) unproven side
-    l = remaining.select(
-        F.col("id").alias("l_id"), F.col("lon").alias("l_lon"), F.col("lat").alias("l_lat")
-    )
-    r = pts.select(
-        F.col("id").alias("r_id"), F.col("lon").alias("r_lon"), F.col("lat").alias("r_lat")
-    )
-    pairs = (
-        r.join(F.broadcast(l))
-        .filter(F.col("l_id") != F.col("r_id"))
-        .withColumn("dist_km", haversine_udf("l_lon", "l_lat", "r_lon", "r_lat"))
-    )
-    w = Window.partitionBy("l_id").orderBy(F.col("dist_km").asc(), F.col("r_id").asc())
-    redo = (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(F.col("l_id").alias("id"), F.col("r_id").alias("neighbor_id"), "dist_km", "rank")
-    )
-    out = redo
+    out = _brute_topk(remaining, pts, k)
     for part in done_parts:
         out = out.unionByName(part)
     if return_stats:
@@ -584,21 +517,7 @@ def knn_join_exact(
 
 
 def knn_bruteforce(items: DataFrame, k: int = 3, id_col: str = "id") -> DataFrame:
-    """Exact O(n²) kNN via cross-join — the correctness oracle for small
+    """Exact O(n²) kNN over all pairs — the correctness oracle for small
     inputs (FIXTURES.md §4); never run at scale."""
-    pts = items.filter(F.col("lon").isNotNull() & F.col("lat").isNotNull()).select(
-        F.col(id_col).alias("id"), "lon", "lat"
-    )
-    l = pts.select(F.col("id").alias("l_id"), F.col("lon").alias("l_lon"), F.col("lat").alias("l_lat"))
-    r = pts.select(F.col("id").alias("r_id"), F.col("lon").alias("r_lon"), F.col("lat").alias("r_lat"))
-    pairs = (
-        l.crossJoin(r)
-        .filter(F.col("l_id") != F.col("r_id"))
-        .withColumn("dist_km", haversine_udf("l_lon", "l_lat", "r_lon", "r_lat"))
-    )
-    w = Window.partitionBy("l_id").orderBy(F.col("dist_km").asc(), F.col("r_id").asc())
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(F.col("l_id").alias("id"), F.col("r_id").alias("neighbor_id"), "dist_km", "rank")
-    )
+    pts = _points(items, id_col)
+    return _brute_topk(pts, pts, k)

@@ -2,27 +2,32 @@
 
 The reference is pure batch with file-level resume; the north_rule asks
 for checkpoint resumability, which the batch path provides via
-sources.checkpoint. This module adds the optional continuous-ingest shape:
-new page files landing in a directory (the stand-in for an Iceberg
-streaming read / Kafka WARC feed) stream through the *same* extraction +
+sources.checkpoint. This module adds the incremental-ingest shape: new
+page files landing in a directory (the stand-in for an Iceberg streaming
+read / Kafka WARC feed) stream through the *same* extraction +
 cell-encode + PIP-join pipeline — transformations are shared, only the
 source/sink differ — with exactly-once output via the streaming
-checkpoint.
+checkpoint. Every query runs with ``trigger(availableNow=True)``: it
+drains the files present when it starts, in micro-batches, then stops;
+the checkpoint makes the next start pick up only the new files.
 
 Micro-batch semantics: the PIP join is stateless (broadcast dim), so no
 watermark is needed; the incremental collection-extent aggregation (the
-reference's during-ingest update, populators.py:253-255) runs in update
-mode per micro-batch.
+reference's during-ingest update, populators.py:253-255) runs as one
+complete-mode result over the micro-batches.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.extract import ITEM_SCHEMA  # noqa: F401  (re-export for callers)
 from ..plans.pipeline import build_items
 
 PAGES_DDL = "url STRING, warc_ts TIMESTAMP, html BINARY, text STRING, lang STRING"
+
+# hash buckets of the upsert table: a micro-batch rewrites only the
+# buckets its keys touch
+UPSERT_BUCKETS = 64
 
 
 def read_pages_stream(spark: SparkSession, input_dir: str) -> DataFrame:
@@ -38,23 +43,18 @@ def stream_items(
     cover: DataFrame,
     out_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ):
-    """pages stream → STAC items parquet sink, exactly-once via checkpoint.
-
-    ``available_now=True`` drains everything currently available then
-    stops — the testable micro-batch mode; ``False`` runs continuously.
-    """
-    items = build_items(pages_stream, cover)
-    writer = (
-        items.writeStream.format("parquet")
+    """pages stream → STAC items parquet sink, exactly-once via checkpoint;
+    drains what is available, then stops."""
+    return (
+        build_items(pages_stream, cover)
+        .writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_collection_counts(
@@ -89,8 +89,6 @@ def stream_items_upsert(
     cover: DataFrame,
     table_path: str,
     checkpoint_dir: str,
-    available_now: bool = True,
-    n_buckets: int = 64,
 ):
     """Streaming MERGE sink — the streaming form of the reference's
     POST → 409 → PUT upsert loop (api_requests.py:102-149): each
@@ -129,14 +127,13 @@ def stream_items_upsert(
             .drop("_rn")
         )
         merge_upsert_bucketed(
-            batch_df.sparkSession, table_path, latest, key="merge_key", n_buckets=n_buckets
+            batch_df.sparkSession, table_path, latest, key="merge_key", n_buckets=UPSERT_BUCKETS
         )
 
-    writer = (
+    return (
         items.writeStream.foreachBatch(_sink)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -311,3 +311,70 @@ def test_session_uses_unix_domain_worker_sockets(spark):
     # TCP can livelock in RTO/zero-window backoff under bidirectional
     # Arrow volume; get_spark must default the channel to unix sockets
     assert spark.conf.get("spark.python.unix.domain.socket.enabled") == "true"
+
+
+def test_haversine_col_matches_numpy_reference(spark):
+    # the ranking distance is a JVM expression; it must agree with the
+    # numpy reference to a few ULP on random pairs and on the edge cases
+    # where a clip or the float order could go wrong, and keep NaN
+    from stac_populator_spark.operators.knn import haversine_col
+
+    rng = np.random.default_rng(2026)
+    n = 2000
+    pairs = [tuple(map(float, r)) for r in np.column_stack([
+        rng.uniform(-180, 180, n), rng.uniform(-90, 90, n),
+        rng.uniform(-180, 180, n), rng.uniform(-90, 90, n),
+    ])]
+    edges = [
+        (10.0, 20.0, 10.0, 20.0),  # identical points: 0.0
+        (-73.5, 45.5, -73.5, 45.5),
+        (0.0, 0.0, 180.0, 0.0),  # antipodal
+        (-112.47, 51.34, 67.53, -51.34),  # antipodal, numpy's a rounds above 1
+        (-115.24, 8.84, 64.76, -8.84),
+        (0.0, 90.0, 0.0, -90.0),  # pole to pole
+        (45.0, 90.0, -135.0, 90.0),  # the north pole twice
+        (0.0, -90.0, 10.0, -89.0),
+        (179.9, 10.0, -179.9, 10.0),  # across the ±180 seam
+        (180.0, 0.0, -180.0, 0.0),
+        (-180.0, 45.0, 179.5, 45.5),
+    ]
+    pairs += edges
+    df = spark.createDataFrame(
+        pd.DataFrame(pairs + [(float("nan"), 10.0, 0.0, 0.0)],
+                     columns=["a_lon", "a_lat", "b_lon", "b_lat"])
+    ).withColumn("i", F.monotonically_increasing_id())
+    got = df.select("i", haversine_col("a_lon", "a_lat", "b_lon", "b_lat").alias("d")) \
+        .toPandas().sort_values("i")["d"].to_numpy()
+    p = np.array(pairs)
+    want = haversine_km(p[:, 0], p[:, 1], p[:, 2], p[:, 3])
+    assert np.all(np.abs(got[:-1] - want) <= 1e-12 * np.abs(want))
+    assert got[len(pairs) - len(edges)] == 0.0  # identical points
+    assert np.isnan(got[-1])  # NaN in, NaN out — not a clipped 20,015 km
+
+
+def test_knn_bruteforce_matches_duckdb_oracle(spark, clustered_points):
+    # the engine's ranking against the oracle's haversine SQL, run by
+    # DuckDB: same neighbors, same ranks, same distances at the oracle's
+    # rounding
+    import duckdb
+
+    import __spark_entry__ as E
+
+    con = duckdb.connect()
+    con.register("pts", clustered_points.toPandas())
+    want = con.execute(f"""
+        WITH pairs AS (
+          SELECT a.id AS id, b.id AS neighbor_id, {E._HAVERSINE_KM_SQL} AS d_km
+          FROM pts a JOIN pts b ON a.id <> b.id
+        )
+        SELECT id, neighbor_id, rank, ROUND(d_km, 3) FROM (
+          SELECT *, ROW_NUMBER() OVER (
+            PARTITION BY id ORDER BY d_km ASC, neighbor_id ASC) AS rank
+          FROM pairs
+        ) WHERE rank <= 3
+    """).fetchall()
+    got = knn_bruteforce(clustered_points, k=3).select(
+        "id", "neighbor_id", "rank", F.round("dist_km", 3)
+    ).collect()
+    assert len(want) == 3 * clustered_points.count()
+    assert sorted(map(tuple, got)) == sorted(want)

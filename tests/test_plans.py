@@ -19,6 +19,13 @@ def plan_of(df) -> str:
     return buf.getvalue()
 
 
+def python_nodes(df) -> int:
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain()  # simple mode: each physical node printed once
+    return buf.getvalue().count("ArrowEvalPython")
+
+
 @pytest.fixture(scope="module")
 def pages_path(spark, tmp_path_factory):
     from stac_populator_spark.datagen import pages_df
@@ -288,16 +295,32 @@ def test_point_grid_cell_stays_in_the_jvm(spark):
     # the join condition: none of these queries crosses into Python
     import __spark_entry__ as E
 
-    def python_nodes(df) -> int:
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain()  # simple mode: each physical node printed once
-        return buf.getvalue().count("ArrowEvalPython")
-
     sf = "/root/testdata/sf0.001"
     assert python_nodes(E._doc_points_tiles(spark, sf)) == 0
     assert python_nodes(E._pip_points(spark, sf)) == 0
     assert python_nodes(E._stac_collections_items(spark, sf)) == 0
+
+
+def test_knn_exact_brute_path_stays_in_the_jvm(spark):
+    # a few dozen points: n² is far below brute_budget, so knn_join_exact
+    # skips the ring and polar passes and ranks the broadcast brute
+    # remnant alone, as the entry query knn_exact_docs does at small
+    # scale; the distance is a JVM expression, so nothing crosses into
+    # Python
+    import numpy as np
+    import pandas as pd
+
+    from stac_populator_spark.operators.knn import knn_join_exact
+
+    rng = np.random.default_rng(5)
+    pts = spark.createDataFrame(pd.DataFrame({
+        "id": range(40), "lon": rng.uniform(-180, 180, 40), "lat": rng.uniform(-85, 85, 40),
+    }))
+    out = knn_join_exact(pts, k=3, res=None)
+    plan = plan_of(out)
+    assert "Generate" not in plan  # no k-ring explode: the brute path alone
+    assert "Window" in plan
+    assert python_nodes(out) == 0
 
 
 def test_similarity_plans_cross_into_python_only_by_kernel(spark, tmp_path):

@@ -19,7 +19,6 @@ PACKAGE = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__)
 
 SCALAR_PANDAS_UDF = Counter({
     "operators.cells:all_cells_udf": 1,
-    "operators.knn:haversine_udf": 1,
     "operators.knn:hex_cell_at_res": 1,
     "operators.knn:kring_udf": 1,
     # feeds a posexplode of band signatures; it restates no other code
